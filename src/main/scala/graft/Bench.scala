@@ -32,10 +32,11 @@ object Bench {
     * covers the operators you'd actually run at 100 TB. */
   val ExactBaselines: Set[String] = Set("e01_self_knn", "e02_cosine_pairs")
 
-  def main(args: Array[String]): Unit = {
-    val repeats = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPEATS", "3").toInt
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+  /** The bench session: `local[cpus]` with one shuffle partition per
+    * core, AQE on, the UI off, and errors-only logging. The graft tools
+    * build their sessions here too, so a number they print is taken
+    * under the bench's own configuration. */
+  def session(cpus: String): SparkSession = {
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
@@ -49,16 +50,26 @@ object Bench {
       .config("spark.sql.codegen.cache.maxEntries", "2000")
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
+    spark
+  }
 
-    // Warmup, untimed: the flagship absorbs JVM/JIT/codegen startup;
-    // a first call of the ANN queries ensures their persisted indexes
-    // exist; and c01/e03 build the catalog's shared materializations
-    // (documents scan, exact dup-pair set, cluster assignment, LSH
-    // pair set) that a dozen dedup/similarity queries read — the timed
-    // runs then measure steady-state the way the dashboard queries
-    // already measure reads of the materialized summary view. Cold
-    // one-time build costs stay visible in BENCH_LAST.tsv (the min
-    // column of the first query to touch each cache) and BENCH_NOTES.
+  /** `SPARK_GRAFT_CPUS`, the core count of every bench-configured run. */
+  def cpus: String = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+
+  /** `SPARK_GRAFT_SF_DIR`, the scale-factor directory the bench reads. */
+  def sfDir: String =
+    sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+
+  /** Warmup, untimed: the flagship absorbs JVM/JIT/codegen startup;
+    * a first call of the ANN queries ensures their persisted indexes
+    * exist; and c01/e03 build the catalog's shared materializations
+    * (documents scan, exact dup-pair set, cluster assignment, LSH
+    * pair set) that a dozen dedup/similarity queries read — the timed
+    * runs then measure steady-state the way the dashboard queries
+    * already measure reads of the materialized summary view. Cold
+    * one-time build costs stay visible in BENCH_LAST.tsv (the min
+    * column of the first query to touch each cache) and BENCH_NOTES. */
+  def warmUp(spark: SparkSession, sfDir: String): Unit =
     for (q <- Seq("q01_purchase_summary", "s02_ann_topk", "s03_ivf_topk",
                   "s04_pq_topk", "s05_ivfpq_topk", "s06_ann_planted",
                   "s07_ivf_planted", "s08_pq_planted", "s09_ivfpq_planted",
@@ -67,11 +78,8 @@ object Bench {
       try SparkEntry.queries(q)(spark, sfDir).count()
       catch { case _: Throwable => () }
 
-    // Per-query executor CPU time alongside wall: this box has 3×
-    // wall variance under host load, but CPU-seconds of the same plan
-    // are load-stable — the column that makes ≤10% round-over-round
-    // deltas meaningful. Listener events are async; the tiny
-    // post-action attribution skew is noise at diagnostic precision.
+  /** Sums executor CPU over completed stages into the returned counter. */
+  def cpuCounter(spark: SparkSession): java.util.concurrent.atomic.AtomicLong = {
     val cpuNs = new java.util.concurrent.atomic.AtomicLong
     spark.sparkContext.addSparkListener(
       new org.apache.spark.scheduler.SparkListener {
@@ -81,6 +89,20 @@ object Bench {
           ()
         }
       })
+    cpuNs
+  }
+
+  def main(args: Array[String]): Unit = {
+    val repeats = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPEATS", "3").toInt
+    val spark = session(cpus)
+    warmUp(spark, sfDir)
+
+    // Per-query executor CPU time alongside wall: this box has 3×
+    // wall variance under host load, but CPU-seconds of the same plan
+    // are load-stable — the column that makes ≤10% round-over-round
+    // deltas meaningful. Listener events are async; the tiny
+    // post-action attribution skew is noise at diagnostic precision.
+    val cpuNs = cpuCounter(spark)
     // Timing forces FULL materialization of the query's own plan
     // (queryExecution.toRdd — every output column computed), not
     // count(): a count on top lets Catalyst prune computed columns
@@ -99,12 +121,8 @@ object Bench {
       // drop the query's registered caches (containment bucket frames)
       // OUTSIDE the timed region, after its repeats: repeats still see
       // the warm cache, and the 150-query loop no longer accumulates
-      // persisted blocks until GC. KEEP_CACHES=1 restores the r12
-      // accumulate-until-GC behavior — the A/B switch for adjudicating
-      // whether async block-drop churn lands in later queries' timed
-      // windows (the r13 s01–s05 wall-cluster question).
-      if (sys.env.get("SPARK_GRAFT_BENCH_KEEP_CACHES").isEmpty)
-        graft.dedup.Dedup.releaseCaches()
+      // persisted blocks until GC.
+      graft.dedup.Dedup.releaseCaches()
       name -> times
     }
     val allResults = timings.map { case (k, ts) => k -> ts(ts.length / 2)._1 }

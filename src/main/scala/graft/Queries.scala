@@ -27,30 +27,35 @@ object Queries {
   val SpendLow = 20000.0
   val SpendHigh = 60000.0
 
+  /** The catalog's shared materializations, one entry per (session,
+    * SF dir, frame name): each frame is built, with its own `.cache()`
+    * placement, the first time a query asks for it and read by every
+    * later one. A frame whose build takes parameters beyond the dir
+    * carries them all in its name. */
+  private val memoized =
+    scala.collection.concurrent.TrieMap.empty[(SparkSession, String, String), Any]
+
+  private def memo[T](spark: SparkSession, dir: String, name: String)(
+      build: => T): T =
+    memoized.getOrElseUpdate((spark, dir, name), build).asInstanceOf[T]
+
   /** The flagship view, materialized once per (session, SF dir) and
     * shared by every dashboard query — mirroring the reference, whose
     * dashboard reads the MATERIALIZED dynamic table rather than
     * re-running the star join per query (`customer_spending_dashboard
     * .py:180-186` selects from `customer_purchase_summary`). Results
     * are identical to recomputing; only the repeated join work goes. */
-  private val summaryCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
-
   private def summary(spark: SparkSession, dir: String): DataFrame =
-    summaryCache.getOrElseUpdate((spark, dir), {
+    memo(spark, dir, "summary") {
       val st = TestData.star(spark, dir)
       PurchaseSummary.customerPurchaseSummary(
         st.transactions, st.customers, st.products, st.merchants).cache()
-    })
+    }
 
   /** Events table, cached once per (session, SF dir) — four analytics
     * queries share the scan. */
-  private val eventsCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
-
   private def events(spark: SparkSession, dir: String): DataFrame =
-    eventsCache.getOrElseUpdate((spark, dir),
-      TestData.events(spark, dir).cache())
+    memo(spark, dir, "events")(TestData.events(spark, dir).cache())
 
   /** Documents table, cached once per (session, SF dir) — twelve
     * dedup/text queries share the scan. Deliberately cached at the
@@ -61,11 +66,8 @@ object Queries {
     * heavy work already lives post-shuffle), while only the
     * single-pass kernel queries win. Those few queries fan out at
     * their use site instead (see kernelDocs). */
-  private val docsCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
-
   private def documents(spark: SparkSession, dir: String): DataFrame =
-    docsCache.getOrElseUpdate((spark, dir),
+    memo(spark, dir, "documents")(
       TestData.table(spark, dir, "documents").cache())
 
   /** The documents frame fanned out to the session's cores — for the
@@ -73,24 +75,21 @@ object Queries {
     * regex) whose cost is row-local CPU over an unsplittable one-
     * partition scan: one 0.6 MB round-robin exchange buys the kernel
     * the whole machine (measured r14: t02 1.11→0.51 s, t08 0.77→0.49,
-    * t15 0.81→0.62, t03 0.66→0.49 at sf0.1/local[32]). Multi-exchange
-    * pipelines must NOT use this — see the docsCache comment. */
+    * t15 0.81→0.62, t03 0.66→0.49 at sf0.1 on 32 cores). Multi-exchange
+    * pipelines must NOT use this — see the documents comment. */
   private def kernelDocs(spark: SparkSession, dir: String): DataFrame =
     TestData.fanOut(documents(spark, dir))
 
   /** Embeddings table, cached once per (session, SF dir) — the ANN /
     * exact-cosine / semantic-dedup entries share the scan. Cached at
-    * the scan's own layout for the same reason as docsCache (a
+    * the scan's own layout for the same reason as documents (a
     * cache-wide fanOut regressed the multi-stage e03–e06 pipelines by
     * ~1 s each — per-task constants at every stage); the O(n²) exact
     * baselines e01/e02, whose verify is pure per-row CPU, fan out at
     * their use site instead (measured r14: e01 4.61→0.68 s,
-    * e02 5.10→0.48 s at sf0.1/local[32]). */
-  private val embCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
-
+    * e02 5.10→0.48 s at sf0.1 on 32 cores). */
   private def embeddings(spark: SparkSession, dir: String): DataFrame =
-    embCache.getOrElseUpdate((spark, dir),
+    memo(spark, dir, "embeddings")(
       TestData.table(spark, dir, "embeddings").cache())
 
   private def spending(df: DataFrame): DataFrame =
@@ -100,23 +99,17 @@ object Queries {
     * (session, SF dir) and shared by j01/d05/d06 — the pipeline shape:
     * pairwise candidates are materialized once, then both the pair
     * report and the cluster assignment derive from them. */
-  private val dupPairsCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
-
   private def dupPairs(spark: SparkSession, dir: String): DataFrame =
-    dupPairsCache.getOrElseUpdate((spark, dir), {
+    memo(spark, dir, "dupPairs") {
       val t = documents(spark, dir).select(col("doc_id"),
         col("source"), array_distinct(TextFunctions.tokens(col("text"))).as("w"))
       Dedup.jaccardJoinExact(t, "doc_id", "w", 0.7, Seq("source")).cache()
-    })
+    }
 
   /** Duplicate-cluster assignment over the shared pair set, likewise
     * computed once and shared by d05/d06. */
-  private val clustersCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
-
   private def dupClusters(spark: SparkSession, dir: String): DataFrame =
-    clustersCache.getOrElseUpdate((spark, dir),
+    memo(spark, dir, "dupClusters")(
       ConnectedComponents.dupClusters(
         documents(spark, dir), "doc_id",
         dupPairs(spark, dir).select(col("a"), col("b")), "a", "b").cache())
@@ -125,11 +118,8 @@ object Queries {
     * computed once per (session, SF dir) and shared by e03/e04 — the
     * pipeline shape again: candidates are materialized once, the pair
     * report and the per-vector argmax both derive from them. */
-  private val lshPairsCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
-
   private def lshCosinePairs(spark: SparkSession, dir: String): DataFrame =
-    lshPairsCache.getOrElseUpdate((spark, dir),
+    memo(spark, dir, "lshCosinePairs")(
       Similarity.cosineNearDuplicatesMulti(
         embeddings(spark, dir), "vec_id", "embedding",
         threshold = Similarity.PairThreshold,
@@ -139,15 +129,20 @@ object Queries {
     * components over the shared multi-table-LSH cosine pair set,
     * computed once per (session, SF dir) and shared by e05/e06 — the
     * same pipeline shape as the text-side d05/d06. */
-  private val embClustersCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
-
   private def embClusters(spark: SparkSession, dir: String): DataFrame =
-    embClustersCache.getOrElseUpdate((spark, dir),
+    memo(spark, dir, "embClusters")(
       ConnectedComponents.dupClusters(
         embeddings(spark, dir).select("vec_id"), "vec_id",
         lshCosinePairs(spark, dir).select(col("a"), col("b")), "a", "b")
         .cache())
+
+  /** Cross-doc duplicated 5-gram occurrences (doc_id, __pos) — the
+    * one gram-keyed exchange d18 (span stats) and d19 (span strip)
+    * both derive from, paid once per (session, SF dir). Small: only
+    * duplicated occurrences survive the mark. */
+  private def dupSpanOccurrences(s: SparkSession, d: String): DataFrame =
+    memo(s, d, "dupSpanOccurrences")(
+      Dedup.dupSpanRows(documents(s, d), "doc_id", "text", 5).cache())
 
   /** Per-doc curation scores (token count, quality, language),
     * computed ONCE per (session, SF dir) and shared by the pipeline
@@ -156,22 +151,8 @@ object Queries {
     * downstream admission gate reads it. The standalone operator
     * entries (t01/t02/t03) deliberately do NOT use this cache — they
     * demonstrate (and are timed as) the scan-local operator itself. */
-  private val scoredDocsCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
-
-  /** Cross-doc duplicated 5-gram occurrences (doc_id, __pos) — the
-    * one gram-keyed exchange d18 (span stats) and d19 (span strip)
-    * both derive from, paid once per (session, SF dir). Small: only
-    * duplicated occurrences survive the mark. */
-  private val dupSpanCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
-
-  private def dupSpanOccurrences(s: SparkSession, d: String): DataFrame =
-    dupSpanCache.getOrElseUpdate((s, d),
-      Dedup.dupSpanRows(documents(s, d), "doc_id", "text", 5).cache())
-
   private def scoredDocs(s: SparkSession, d: String): DataFrame =
-    scoredDocsCache.getOrElseUpdate((s, d),
+    memo(s, d, "scoredDocs")(
       documents(s, d).select(col("doc_id"), col("source"),
         TextFunctions.tokenCount(col("text")).as("n_tokens"),
         TextFunctions.qualityScore(col("text")).as("quality_score"),
@@ -180,17 +161,14 @@ object Queries {
   /** Contaminated-doc verdict set (the d04 decontamination output keys),
     * computed once per (session, SF dir) and shared by the c02/c03
     * anti-joins. */
-  private val contaminatedIdsCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
-
   private def contaminatedIds(s: SparkSession, d: String): DataFrame =
-    contaminatedIdsCache.getOrElseUpdate((s, d), {
+    memo(s, d, "contaminatedIds") {
       val docs = documents(s, d)
       val isBench = col("source").isin("src0", "src1")
       Dedup.contaminationCounts(
         docs.filter(!isBench), docs.filter(isBench), "doc_id", "text", 5)
         .select("doc_id").cache()
-    })
+    }
 
   /** Representative keep-list of the LEXICAL dup clusters (min-id per
     * d05 cluster) — the single definition c01/c02/c03/c07 share, so
@@ -227,11 +205,8 @@ object Queries {
     * totals + final filter — without the cache that re-ran the whole
     * bigram window pipeline per scan, the derived-counts defect class
     * at the composition level). */
-  private val nllCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
-
   private def bigramNllScores(s: SparkSession, d: String): DataFrame =
-    nllCache.getOrElseUpdate((s, d), bigramNllScoresBuild(s, d).cache())
+    memo(s, d, "bigramNllScores")(bigramNllScoresBuild(s, d).cache())
 
   private def bigramNllScoresBuild(s: SparkSession, d: String): DataFrame = {
     val docs = documents(s, d)
@@ -279,11 +254,8 @@ object Queries {
     * materialized once per (session, dir) like the pair/cluster
     * caches: curated-semantic train survivors → token-budget mixture →
     * fixed-length sequence packing. */
-  private val exportSeqsCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
-
   private def exportPackedSeqs(s: SparkSession, d: String): DataFrame =
-    exportSeqsCache.getOrElseUpdate((s, d), buildExportSeqs(s, d).cache())
+    memo(s, d, "exportPackedSeqs")(buildExportSeqs(s, d).cache())
 
   private def buildExportSeqs(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
@@ -319,15 +291,12 @@ object Queries {
     * quantize to the globally minimal-ADC PQ code — so the ANN result
     * EQUALS the exact top-k and the brute-force cosine SQL is a full
     * oracle for the approximate operators (the e03 trick, applied to
-    * top-k search). Cached per (session, SF dir): four catalog entries
-    * share the construction. */
-  private val plantedCache =
-    scala.collection.concurrent.TrieMap
-      .empty[(SparkSession, String, Long), (DataFrame, Seq[Float])]
+    * top-k search). Cached per (session, SF dir, query id, id base):
+    * four catalog entries share each construction. */
   private def plantedEmbeddings(s: SparkSession, d: String,
                                 qId: Long = 0L, idBase: Long = 1000000L)
       : (DataFrame, Seq[Float]) =
-    plantedCache.getOrElseUpdate((s, d, qId), {
+    memo(s, d, s"plantedEmbeddings:$qId:$idBase") {
       val emb = embeddings(s, d)
       val q = emb.filter(col("vec_id") === qId)
         .select("embedding").head().getSeq[Float](0)
@@ -337,7 +306,7 @@ object Queries {
         .select((col("id") + lit(idBase)).as("vec_id"),
           typedLit(q.toSeq).as("embedding"))
       (base.unionByName(planted).cache(), q)
-    })
+    }
 
   /** Deterministic total order for summary rows. `transaction_id`
     * ("orderkey-linenumber") is NOT unique in the synthetic testdata, so
@@ -357,10 +326,8 @@ object Queries {
     * output is the materialized artifact and every eval metric is an
     * aggregate read of it, so rebuilding the margin scan per key
     * (~0.85 s × 11 on the bench) measured the wrong shape. */
-  private val scoredCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
   private def classifierScored(s: SparkSession, d: String): DataFrame =
-    scoredCache.getOrElseUpdate((s, d), {
+    memo(s, d, "classifierScored") {
       val docs = documents(s, d)
       val m = TextClassifier.marginMicro(docs, "doc_id", "text")
       docs.select(col("doc_id"), col("source"),
@@ -368,7 +335,7 @@ object Queries {
         .join(m, "doc_id")
         .withColumn("pred", col("score_micro") > 0)
         .cache()
-    })
+    }
 
   /** A scored frame (source, label, pred, score_micro) + the ×2-grid
     * average tie rank r2 = 2·rank + ties − 1 (exact BIGINT) used by
@@ -1137,7 +1104,7 @@ object Queries {
     // jaccard 4/14 ≈ 0.29) exercising the exact-verify reject.
     // Honest recall on the natural corpus stays pinned in
     // DedupRecallGateSpec (subset of the exact pair set, identical
-    // jaccard values, recall floor) and tools.MinhashRecall.
+    // jaccard values, recall floor).
     "d02_minhash_neardups" -> ((s, d) => {
       val ids = documents(s, d).select(col("doc_id")).distinct()
       def tok(p: String, j: Int): org.apache.spark.sql.Column =
@@ -1259,7 +1226,7 @@ object Queries {
     // runs the NARROW index (tables = 4: half the storage, half the
     // probes of s06's 8) — together they pin the OR-amplification
     // parameter axis; honest recall on the RAW corpus stays pinned in
-    // SimilarityIvfSpec + tools/LshRecall. First call builds the
+    // SimilarityIvfSpec + LshScaleGateSpec. First call builds the
     // index; every probe after reads ≈ tables·(planes+1)/2^planes of
     // the corpus via tb-range file skipping, probe buckets computed
     // driver-side (zero pre-scan Spark jobs).
@@ -1335,7 +1302,7 @@ object Queries {
     // parameters on the vec_id-0 planting; s02–s05 above run the
     // coarse/narrow parameter variants on an independent vec_id-1
     // planting. Honest recall on the raw corpus is pinned in
-    // SimilarityIvfSpec / PqAnnSpec / tools.{Lsh,Ivf,Minhash}Recall. --
+    // SimilarityIvfSpec / PqAnnSpec / LshScaleGateSpec. --
 
     // LSH multi-table on the planted corpus: the ten planted vectors
     // share the query's bucket in all 8 tables, so the probe set
@@ -2744,7 +2711,7 @@ object Queries {
     // bounded by construction: the corpus regex runs exactly twice —
     // once into the vocab-sized count table, once for the scoring
     // stream, which joins the per-bigram weights back in its only
-    // full-stream exchange (plan-guarded in QueriesSpec/ExplainT20).
+    // full-stream exchange (plan-guarded in QueriesSpec).
     // (The window formulation sorted the whole corpus stream twice
     // and re-scanned the regex for the T scalar — measured ~2×
     // slower.) Per-bigram nats land on the 1e-6 integer grid before

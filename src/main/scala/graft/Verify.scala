@@ -2,7 +2,12 @@ package graft
 import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+  * plus oracle_sql.json, for the DuckDB oracle compare.
+  *
+  * Usage: runMain graft.Verify <sfDir> <outDir> [query...] — named
+  * queries dump only those (and only their oracle SQL), the dev loop
+  * that `python3 tools/check_oracle.py <sfDir> <outDir>` closes without
+  * re-running the whole catalog. */
 object Verify {
   // JSON string escape: backslash, quote, and ALL control chars (<0x20)
   // — a tab or CR in builder-authored SQL would otherwise make the
@@ -54,7 +59,12 @@ object Verify {
   }
 
   def main(args: Array[String]): Unit = {
-    val Array(sfDir, outDir) = args
+    require(args.length >= 2, "usage: Verify <sfDir> <outDir> [query...]")
+    val sfDir = args(0); val outDir = args(1)
+    val names = args.drop(2).toSet
+    names.foreach(n =>
+      require(SparkEntry.queries.contains(n), s"unknown query '$n'"))
+    def selected(name: String) = names.isEmpty || names(name)
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
@@ -64,14 +74,14 @@ object Verify {
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
-    SparkEntry.queries.foreach { case (name, fn) =>
+    SparkEntry.queries.filter(e => selected(e._1)).foreach { case (name, fn) =>
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
       catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
     }
-    val json = SparkEntry.oracleSql
+    val json = SparkEntry.oracleSql.filter(e => selected(e._1))
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     // Environment sidecar: when a hash diverges between the builder's
@@ -90,7 +100,8 @@ object Verify {
       env.map { case (k, v) => s"${q(k)}: ${q(v)}" }
         .mkString("{", ",", "}"))
     Files.writeString(Paths.get(s"$outDir/value_digests.json"),
-      digestJson(spark, outDir, SparkEntry.queries.keys.toSeq.sorted))
+      digestJson(spark, outDir,
+        SparkEntry.queries.keys.filter(selected).toSeq.sorted))
     spark.stop()
   }
 }

@@ -33,16 +33,19 @@ object TransactionGenerator {
                merchants: DataFrame, n: Int, seed: Long,
                startLsn: Long = 1L, date: String = "2024-09-15",
                baseEpoch: Long = 1726358400L): DataFrame = {
-    val custIds = customers.select("customer_id")
-      .collect().map(_.getInt(0)).sorted
-    val merchIds = merchants.select("merchant_id")
-      .collect().map(_.getInt(0)).sorted
-    val prodIds = products.select("product_id")
-      .collect().map(_.getInt(0)).sorted
+    // keys stay boxed in their dimension's type (INT on the reference
+    // seed, BIGINT on the testdata star), so each FK literal — and the
+    // generated FK column — carries that type
+    def keys(dim: DataFrame, c: String): Array[Any] =
+      dim.select(c).collect().map(_.get(0))
+        .sortBy(_.asInstanceOf[Number].longValue)
+    val custIds = keys(customers, "customer_id")
+    val merchIds = keys(merchants, "merchant_id")
+    val prodIds = keys(products, "product_id")
 
-    val custArr = array(custIds.map(lit(_)).toIndexedSeq: _*)
-    val merchArr = array(merchIds.map(lit(_)).toIndexedSeq: _*)
-    val prodArr = array(prodIds.map(lit(_)).toIndexedSeq: _*)
+    val custArr = array(custIds.map(lit).toIndexedSeq: _*)
+    val merchArr = array(merchIds.map(lit).toIndexedSeq: _*)
+    val prodArr = array(prodIds.map(lit).toIndexedSeq: _*)
 
     val id = col("id")
     val h = (salt: Int) => xxhash64(id, lit(seed), lit(salt))

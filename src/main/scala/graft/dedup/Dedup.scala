@@ -100,26 +100,14 @@ object Dedup {
       .agg(min(col(idCol)).as(idCol), count(lit(1)).as("dup_count"))
       .select(col(idCol), col(contentCol), col("dup_count"))
 
-  /** MinHash signature over a prebound shingle-array column as a pure
-    * projection. NOTE: higher-order functions are interpreted (not
-    * codegen'd) in Spark — fine for small inputs and tests, but the hot
-    * path for corpora is [[minhashSignatures]] below (measured ~50×
-    * faster at 5k docs). */
-  def minhashFromShingles(shingles: Column, numHashes: Int): Column =
-    transform(sequence(lit(1), lit(numHashes)),
-      seed => array_min(transform(shingles, s => xxhash64(s, seed.cast("int")))))
-
-  /** Convenience: MinHash signature straight from text (interpreted
-    * HOF path — see [[minhashSignatures]] for the corpus-scale form). */
-  def minhashSignature(text: Column, shingleLen: Int, numHashes: Int): Column =
-    minhashFromShingles(TextFunctions.shingles(text, shingleLen), numHashes)
-
   /** Corpus-scale MinHash: explode shingles, hash them through
     * `numHashes` codegen'd xxhash64 columns, and min-aggregate back per
     * document (map-side partial mins → one shuffle of numHashes longs
-    * per doc). Returns (idCol, __sh, __sig). This is the whole-stage-
-    * codegen formulation of the interpreted [[minhashFromShingles]] —
-    * identical signatures, ~50× the throughput. */
+    * per doc). Returns (idCol, __sh, __sig). Slot i is the minimum
+    * over the doc's shingles of xxhash64(shingle, i + 1), all in
+    * whole-stage codegen — measured ~50× the throughput of the same
+    * signature as higher-order array functions, which Spark
+    * interprets. */
   def minhashSignatures(docs: DataFrame, idCol: String, textCol: String,
                         shingleLen: Int, numHashes: Int): DataFrame = {
     val sh = docs.select(col(idCol),
@@ -370,12 +358,16 @@ object Dedup {
 
   /** [[jaccardJoinAcross]] when both corpora live in ONE frame split by
     * a predicate (the decontamination shape: bench rows are a `source`
-    * subset of the same table). Identical output; the two-frame form
-    * plans the corpus scan + tokenize TWICE (a filtered scan per union
-    * leg, and again inside the vocabulary subtree — four scans of the
-    * same table), this one plans it once per consumer (guide §2.4:
-    * remove duplicate passes). `rightSide` true ⇒ right corpus (the
-    * `b` output column); null counts as left. */
+    * subset of the same table). `rightSide` true ⇒ right corpus (the
+    * `b` output column); false OR NULL ⇒ left. So, for a frame with
+    * distinct ids, the output equals `jaccardJoinAcross(
+    * docs.filter(!coalesce(rightSide, false)), docs.filter(rightSide),
+    * …)` — not `docs.filter(!rightSide)`, which drops the NULL rows
+    * (pinned in ExtensionsSpec). The two-frame form plans the corpus
+    * scan + tokenize TWICE (a filtered scan per union leg, and again
+    * inside the vocabulary subtree — four scans of the same table),
+    * this one plans it once per consumer (guide §2.4: remove duplicate
+    * passes). */
   def jaccardJoinAcrossTagged(docs: DataFrame, idCol: String,
                               tokensCol: String, rightSide: Column,
                               threshold: Double,
@@ -454,9 +446,11 @@ object Dedup {
   }
 
   /** [[containmentJoinAcross]] over ONE frame split by a predicate —
-    * see [[jaccardJoinAcrossTagged]] for why (identical output, half
-    * the corpus scans). `rightSide` true ⇒ right corpus (`b` column);
-    * null counts as left. */
+    * see [[jaccardJoinAcrossTagged]] for why (half the corpus scans).
+    * `rightSide` true ⇒ right corpus (`b` column); false OR NULL ⇒
+    * left. For a frame with distinct ids the output equals
+    * `containmentJoinAcross(docs.filter(!coalesce(rightSide, false)),
+    * docs.filter(rightSide), …)` (pinned in ContainmentJoinSpec). */
   def containmentJoinAcrossTagged(docs: DataFrame, idCol: String,
                                   tokensCol: String, rightSide: Column,
                                   threshold: Double, minSize: Int = 1,
@@ -1083,25 +1077,13 @@ object Dedup {
   def hamming(a: Column, b: Column): Column =
     aggregate(zip_with(a, b, (x, y) => abs(x - y)), lit(0), (acc, x) => acc + x)
 
-  /** Corpus-scale SimHash: explode tokens, tally the 64 signed-bit sums
-    * as codegen'd conditional aggregates (map-side partials → one
-    * shuffle of 64 longs per doc), then threshold to the bit signature.
-    * Same output as [[simhashSignature]], whole-stage-codegen path. */
-  def simhashSignatures(docs: DataFrame, idCol: String,
-                        textCol: String): DataFrame = {
-    val h = xxhash64(col("__t"))
-    val aggs = Seq.tabulate(64)(j =>
-      sum(when(shiftright(h, j).bitwiseAND(lit(1L)) === 1, 1).otherwise(-1))
-        .as(s"__b$j"))
-    docs.select(col(idCol), explode(TextFunctions.tokens(col(textCol))).as("__t"))
-      .groupBy(idCol).agg(aggs.head, aggs.tail: _*)
-      .select(col(idCol), array(Seq.tabulate(64)(j =>
-        when(col(s"__b$j") > 0, 1).otherwise(0)): _*).as("__sig"))
-  }
-
-  /** [[simhashSignatures]] packed into one long per doc: the 64 sign
-    * sums fold into bits with Scala-level unrolled shifts (codegen'd,
-    * no lambdas). Hamming distance becomes `bit_count(a ^ b)`. */
+  /** Corpus-scale SimHash packed into one long per doc: explode tokens,
+    * tally the 64 signed-bit sums as codegen'd conditional aggregates
+    * (map-side partials → one shuffle of 64 longs per doc), then fold
+    * the signs into bits with Scala-level unrolled shifts (codegen'd,
+    * no lambdas). Bit j is set when Σ_tokens (±1 by bit j of
+    * xxhash64(token)) > 0, the slot rule of [[simhashSignature]].
+    * Hamming distance becomes `bit_count(a ^ b)`. */
   def simhashSignaturesPacked(docs: DataFrame, idCol: String,
                               textCol: String): DataFrame = {
     val h = xxhash64(col("__t"))

@@ -1,8 +1,8 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
+import graft.Bench
 import graft.dedup.Dedup
 
 /** Dev measurement for the d04-vs-d09 crossover: exact decontamination
@@ -28,13 +28,9 @@ object BloomCrossoverBench {
     val corpusDir = args.headOption.getOrElse(
       s"${sys.props("java.io.tmpdir")}/graft-scale10")
     val benchSf = args.lift(1).getOrElse("/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.autoBroadcastJoinThreshold", "-1")
-      .config("spark.sql.adaptive.autoBroadcastJoinThreshold", "-1")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Bench.session(Bench.cpus)
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    spark.conf.set("spark.sql.adaptive.autoBroadcastJoinThreshold", "-1")
 
     val corpus = spark.read.parquet(s"$corpusDir/documents.parquet")
       .select("doc_id", "text")
@@ -42,7 +38,7 @@ object BloomCrossoverBench {
       .select("doc_id", "text")
     println(s"[crossover] corpus=${corpus.count()} bench=${bench.count()} docs")
 
-    // wall time at local[32] is fixed-cost-bound; the metric that
+    // wall time on 32 local cores is fixed-cost-bound; the metric that
     // scales with cluster network is shuffle bytes, so account both
     val shuffled = new java.util.concurrent.atomic.AtomicLong
     spark.sparkContext.addSparkListener(

@@ -1,8 +1,8 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
+import graft.Bench
 import graft.streaming.IncrementalDsir
 
 /** Measured evidence for the IncrementalDsir Δ-cost claim: fold a
@@ -17,10 +17,7 @@ object DsirIngestBench {
   def main(args: Array[String]): Unit = {
     val nBatches = args.headOption.map(_.toInt).getOrElse(20)
     val batchSize = args.lift(1).map(_.toInt).getOrElse(2000)
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Bench.session(Bench.cpus)
     import spark.implicits._
 
     val statePath = java.nio.file.Files

@@ -1,7 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
+import graft.Bench
 import graft.streaming.IncrementalDupSpans
 
 /** Measured evidence for the IncrementalDupSpans Δ-cost claim: fold a
@@ -20,10 +19,7 @@ object DupSpanIngestBench {
   def main(args: Array[String]): Unit = {
     val nBatches = args.headOption.map(_.toInt).getOrElse(15)
     val batchSize = args.lift(1).map(_.toInt).getOrElse(2000)
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Bench.session(Bench.cpus)
     import spark.implicits._
 
     val statePath = java.nio.file.Files

@@ -3,6 +3,7 @@ package graft.tools
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.Bench
 import graft.similarity.Similarity
 
 /** Dev scaling experiment for the embedding suite (the e03/e04/s02
@@ -47,13 +48,7 @@ object EmbeddingScaleBench {
   def main(args: Array[String]): Unit = {
     val mode = args.headOption.getOrElse("/root/testdata/sf0.1")
     val factor = args.lift(1).map(_.toInt).getOrElse(10)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Bench.session(Bench.cpus)
 
     if (mode == "planted") planted(spark, factor)
     else gapless(spark, mode, factor)

@@ -1,8 +1,9 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.Bench
 import graft.dedup.Dedup
 import graft.text.TextFunctions
 
@@ -22,13 +23,7 @@ object GramKeySweep {
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse(
       s"${sys.props("java.io.tmpdir")}/graft-scale100")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Bench.session(Bench.cpus)
 
     val shuffled = new java.util.concurrent.atomic.AtomicLong
     spark.sparkContext.addSparkListener(

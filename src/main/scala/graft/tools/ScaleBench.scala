@@ -1,7 +1,9 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+
+import graft.Bench
 
 /** Dev scaling experiment: replicate the FACT side (orders+lineitem)
   * `factor`× with shifted order keys — dims unchanged, so the
@@ -24,13 +26,7 @@ object ScaleBench {
     else Seq("q01_purchase_summary", "q11_daily_items",
              "q19_category_revenue", "q24_median_order_value")
     val dst = s"${sys.props("java.io.tmpdir")}/graft-scale$factor"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Bench.session(Bench.cpus)
     // events.parquet carries ns timestamps (see TestData.events)
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
 
@@ -134,7 +130,7 @@ object ScaleBench {
       fs.create(done).close()
     }
 
-    // wall time at local[32] is fixed-cost-bound; the metric that
+    // wall time on 32 local cores is fixed-cost-bound; the metric that
     // scales with cluster network is shuffle bytes — account both
     // (the BloomCrossoverBench listener)
     val shuffled = new java.util.concurrent.atomic.AtomicLong

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
+import graft.Bench
 
 /** Learn a BPE merge table from a documents corpus and print it as
   * Scala source — how graft.text.Bpe.DefaultMerges was produced
@@ -12,11 +12,7 @@ object TrainBpe {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
     val n = args.lift(1).map(_.toInt).getOrElse(24)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Bench.session(Bench.cpus)
     val docs = graft.sources.TestData.table(spark, sfDir, "documents")
     val t0 = System.nanoTime()
     val merges = graft.text.Bpe.train(docs, "text", n)

@@ -1,7 +1,8 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
+
+import graft.Bench
 
 /** Train the hashed bag-of-words quality classifier against the t02
   * heuristic gate (label = qualityScore >= 0.72) and print the frozen
@@ -14,11 +15,7 @@ object TrainTextClassifier {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
     val iters = args.lift(1).map(_.toInt).getOrElse(200)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Bench.session(Bench.cpus)
     val docs = graft.sources.TestData.table(spark, sfDir, "documents")
     val labels = docs.select(col("doc_id"),
       (graft.text.TextFunctions.qualityScore(col("text")) >= 0.72)

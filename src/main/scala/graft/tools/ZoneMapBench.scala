@@ -1,8 +1,8 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
+import graft.Bench
 import graft.cdc.PartitionedReplicatedTable
 
 /** Measured zone-map data skipping on reference-shaped data: the fact
@@ -17,12 +17,7 @@ import graft.cdc.PartitionedReplicatedTable
 object ZoneMapBench {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Bench.session(Bench.cpus)
 
     val path = s"${sys.props("java.io.tmpdir")}/graft-zonebench"
     org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(path))

@@ -133,4 +133,22 @@ class CdcSpec extends AnyFunSuite {
       n = 3000, seed = 42L)
     assert(gen.exceptAll(gen2).count() == 0 && gen2.exceptAll(gen).count() == 0)
   }
+
+  test("generator: BIGINT dimension keys (the testdata star) keep their type") {
+    val st = graft.sources.TestData.star(spark, sf)
+    val gen = TransactionGenerator.generate(
+      spark, st.customers, st.products, st.merchants, n = 500, seed = 7L)
+      .cache()
+    assert(gen.count() == 500)
+    for ((fk, dim) <- Seq("customer_id" -> st.customers,
+                          "product_id" -> st.products,
+                          "merchant_id" -> st.merchants)) {
+      assert(gen.schema(fk).dataType == dim.schema(fk).dataType, fk)
+      assert(gen.join(dim, Seq(fk), "left_anti").count() == 0, s"$fk closure")
+    }
+    val bad = gen.join(st.products, "product_id")
+      .filter(abs(col("total_price") - col("quantity") * col("price")) > 1e-9)
+    assert(bad.count() == 0)
+    gen.unpersist()
+  }
 }

@@ -131,6 +131,13 @@ class ContainmentJoinSpec extends AnyFunSuite {
     val right = (mkDocs(2, 1) ++ Seq(
       (300L, (0 until 9).map(j => s"w$j")),   // ⊂ several long left docs
       (301L, Seq("z1", "z2", "z3")))).toDF("doc_id", "w").cache()
+    // the tagged form reads both corpora from ONE frame, so ids are
+    // made distinct there; the side predicate is NULL on every fourth
+    // left row, which the tagged form counts as left
+    val side = col("right_side")
+    val tagged = left.withColumn("doc_id", col("doc_id") + 1000L)
+      .withColumn("right_side", when(col("doc_id") % 4 =!= 0, lit(false)))
+      .unionByName(right.withColumn("right_side", lit(true))).cache()
 
     for (t <- Seq(0.7, 0.9)) {
       val x = left.alias("x"); val y = right.alias("y")
@@ -151,8 +158,19 @@ class ContainmentJoinSpec extends AnyFunSuite {
           bucketCap = 3)
         .as[(Long, Long, Double)].collect().toSet
       assert(split == expect, s"t=$t split diverged")
+      val twoFrame = Dedup.containmentJoinAcross(
+          tagged.filter(!coalesce(side, lit(false))), tagged.filter(side),
+          "doc_id", "w", t)
+        .as[(Long, Long, Double)].collect().toSet
+      val oneFrame = Dedup.containmentJoinAcrossTagged(tagged, "doc_id", "w",
+          side, t)
+        .as[(Long, Long, Double)].collect().toSet
+      assert(oneFrame == twoFrame, s"t=$t tagged: missed " +
+        s"${(twoFrame -- oneFrame).size}, extra ${(oneFrame -- twoFrame).size}")
+      assert(twoFrame.exists(_._1 % 4 == 0),
+        s"t=$t tagged: no pair has a NULL-predicate left row")
     }
-    left.unpersist(); right.unpersist()
+    left.unpersist(); right.unpersist(); tagged.unpersist()
   }
 
   test("real corpus: containment join == brute force, and is a strict superset signal vs jaccard") {

@@ -144,6 +144,13 @@ class ExtensionsSpec extends AnyFunSuite {
     val left = mk(0).toDF("doc_id", "w").cache()
     val right = (mk(1) ++ Seq((300L, Seq.empty[String])))
       .toDF("doc_id", "w").cache()
+    // the tagged form reads both corpora from ONE frame, so ids are
+    // made distinct there; the side predicate is NULL on every fourth
+    // left row, which the tagged form counts as left
+    val side = col("right_side")
+    val tagged = left.withColumn("doc_id", col("doc_id") + 1000L)
+      .withColumn("right_side", when(col("doc_id") % 4 =!= 0, lit(false)))
+      .unionByName(right.withColumn("right_side", lit(true))).cache()
 
     for (t <- Seq(0.5, 0.8)) {
       val brute = left.alias("x").join(right.alias("y"))
@@ -165,8 +172,19 @@ class ExtensionsSpec extends AnyFunSuite {
         .as[(Long, Long, Double)].collect().toSeq.sorted
       assert(split == brute,
         s"t=$t split: ${brute.size} brute vs ${split.size} split")
+      val twoFrame = Dedup.jaccardJoinAcross(
+          tagged.filter(!coalesce(side, lit(false))), tagged.filter(side),
+          "doc_id", "w", t)
+        .as[(Long, Long, Double)].collect().toSeq.sorted
+      val oneFrame = Dedup.jaccardJoinAcrossTagged(tagged, "doc_id", "w",
+          side, t)
+        .as[(Long, Long, Double)].collect().toSeq.sorted
+      assert(oneFrame == twoFrame,
+        s"t=$t tagged: ${twoFrame.size} two-frame vs ${oneFrame.size} tagged")
+      assert(twoFrame.exists(_._1 % 4 == 0),
+        s"t=$t tagged: no pair has a NULL-predicate left row")
     }
-    left.unpersist(); right.unpersist()
+    left.unpersist(); right.unpersist(); tagged.unpersist()
   }
 
   test("ANN probes a fraction of the corpus and overlaps the exact top-k") {
