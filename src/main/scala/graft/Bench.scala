@@ -15,13 +15,13 @@ import org.apache.spark.sql.SparkSession
   * reference's dashboard-over-materialized-view shape; the cold
   * first-repeat cost stays visible in BENCH_LAST.tsv (min/med/max).
   *
-  * The JSON line must survive the driver's bounded tail capture
-  * (~2000 chars of combined output), so: log level ERROR (no WARN
+  * The JSON line is parsed from the run's output and kept as a bounded
+  * tail, so it stays small and clean: log level ERROR (no WARN
   * interleaving mid-line), the line is printed AFTER spark.stop()
   * (no shutdown logs after it), values are rounded to milliseconds,
-  * and if the full line would still overflow the tail window the
-  * per-query keys fall back to their unique `q01`/`t05` prefixes
-  * (full-precision results always go to BENCH_LAST.tsv for humans).
+  * per-query keys are their unique `q01`/`t05` prefixes, and only the
+  * wall medians ride on it — per-query CPU and spread go to
+  * BENCH_FULL.json, full precision to BENCH_LAST.tsv for humans.
   */
 object Bench {
 
@@ -137,21 +137,12 @@ object Bench {
     // The FULL per-query record as JSON — wall (median/min/max) AND
     // executor-CPU per query — written to the repo so per-query CPU
     // survives in machine-readable form. The stdout line keeps its
-    // r9 schema/size: the driver's tail capture is bounded and a
-    // parse failure there would lose the round's headline, so the
-    // sidecar carries what the bounded line cannot.
+    // r9 schema/size: a parse failure there would lose the round's
+    // headline, so the sidecar carries what the line does not.
     try {
-      val qj = timings.map { case (k, ts) =>
-        val m = ts(ts.length / 2)
-        f""""$k":{"wall":${m._1}%.3f,"cpu":${m._2}%.3f,""" +
-          f""""min":${ts.head._1}%.3f,"max":${ts.last._1}%.3f}"""
-      }.mkString("{", ",", "}")
       java.nio.file.Files.write(
         java.nio.file.Paths.get("BENCH_FULL.json"),
-        (f"""{"metric":"total","value":$total%.3f,"unit":"sec",""" +
-          f""""cpu_total":$cpuTotal%.3f,""" +
-          f""""exact_baselines_total":$baseTotal%.3f,""" +
-          f""""repeats":$repeats,"sf":"$sfDir","queries":$qj}""" + "\n")
+        (renderFull(timings, total, baseTotal, cpuTotal, repeats, sfDir) + "\n")
           .getBytes("UTF-8"))
     } catch { case _: Throwable => () }
 
@@ -173,9 +164,7 @@ object Bench {
           .getBytes("UTF-8"))
     } catch { case _: Throwable => () }
 
-    val out = renderLine(results, baseResults,
-      timings.map { case (k, ts) => k -> ts(ts.length / 2)._2 },
-      total, baseTotal, cpuTotal, sfDir)
+    val out = renderLine(results, baseResults, total, baseTotal, cpuTotal, sfDir)
 
     spark.stop() // before println: no executor-shutdown log interleaving
     println(out)
@@ -184,31 +173,40 @@ object Bench {
   /** Render the driver-parsed stdout line. PURE and spec-pinned
     * (BenchLineSpec): the r11–r13 lines silently failed the driver's
     * parse and erased three rounds of round-over-round ground truth
-    * (PERF_r14 `prev_bench_ok: false`), so the line's shape is now a
-    * tested contract. `queries_cpu` (r15) carries per-query executor-
-    * CPU seconds — the column that survives this host's steal bursts —
-    * next to the wall medians; all pre-r15 keys are unchanged. The
-    * short-key fallback keeps the documented ~2000-char budget
-    * workable; prefixes are spec-asserted UNIQUE so it stays
-    * lossless. */
+    * (PERF_r14 `prev_bench_ok: false`), so the line's shape and size
+    * are a tested contract. Keys are the unique `q01`/`t05` prefixes
+    * (spec-asserted UNIQUE, so lossless): a full-key line is twice as
+    * long. Per-query CPU is not on the line — r15 put it there and
+    * doubled it past 4k chars; it lives in [[renderFull]]. */
   private[graft] def renderLine(results: Seq[(String, Double)],
                                 baseResults: Seq[(String, Double)],
-                                cpuResults: Seq[(String, Double)],
                                 total: Double, baseTotal: Double,
                                 cpuTotal: Double, sfDir: String): String = {
-    def line(short: Boolean): String = {
-      def sect(rs: Seq[(String, Double)]): String = rs.map { case (k, v) =>
-        val key = if (short) k.takeWhile(_ != '_') else k
-        f""""$key":$v%.3f"""
-      }.mkString("{", ",", "}")
-      f"""{"metric":"total","value":$total%.3f,"unit":"sec","queries":${sect(results)},""" +
-        f""""exact_baselines":${sect(baseResults)},""" +
-        f""""exact_baselines_total":$baseTotal%.3f,""" +
-        f""""cpu_total":$cpuTotal%.3f,""" +
-        f""""queries_cpu":${sect(cpuResults)},"sf":"$sfDir"}"""
-    }
-    val full = line(short = false)
-    // ~2000-char tail minus sbt's trailing "[success] Total time" line.
-    if (full.length <= 1900) full else line(short = true)
+    def sect(rs: Seq[(String, Double)]): String = rs.map { case (k, v) =>
+      f""""${k.takeWhile(_ != '_')}":$v%.3f"""
+    }.mkString("{", ",", "}")
+    f"""{"metric":"total","value":$total%.3f,"unit":"sec","queries":${sect(results)},""" +
+      f""""exact_baselines":${sect(baseResults)},""" +
+      f""""exact_baselines_total":$baseTotal%.3f,""" +
+      f""""cpu_total":$cpuTotal%.3f,"sf":"$sfDir"}"""
+  }
+
+  /** Render BENCH_FULL.json's one JSON object: per full query name,
+    * the wall median / min / max and the executor-CPU median of its
+    * repeats (each query's repeats sorted by wall). PURE and
+    * spec-pinned (BenchLineSpec). */
+  private[graft] def renderFull(timings: Seq[(String, Seq[(Double, Double)])],
+                                total: Double, baseTotal: Double,
+                                cpuTotal: Double, repeats: Int,
+                                sfDir: String): String = {
+    val qj = timings.map { case (k, ts) =>
+      val m = ts(ts.length / 2)
+      f""""$k":{"wall":${m._1}%.3f,"cpu":${m._2}%.3f,""" +
+        f""""min":${ts.head._1}%.3f,"max":${ts.last._1}%.3f}"""
+    }.mkString("{", ",", "}")
+    f"""{"metric":"total","value":$total%.3f,"unit":"sec",""" +
+      f""""cpu_total":$cpuTotal%.3f,""" +
+      f""""exact_baselines_total":$baseTotal%.3f,""" +
+      f""""repeats":$repeats,"sf":"$sfDir","queries":$qj}"""
   }
 }

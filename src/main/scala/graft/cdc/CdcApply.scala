@@ -15,8 +15,12 @@ import org.apache.spark.sql.functions._
   * only the PK populated.
   *
   * Scale posture: `latest` shuffles the batch by PK once (window) and
-  * `applyBatch` joins current⋈batch on PK — both partition by the merge
-  * key, no broadcast of the big side, no driver-side state. Apply is
+  * `mergeWinners` joins current⋈winners on PK — both partition by the
+  * merge key, no broadcast of the big side, no driver-side state. A
+  * caller that needs the winners more than once (the partitioned
+  * replica collects their partitions, then merges them) materializes
+  * `latest` once and hands the rows to `mergeWinners`, so the batch is
+  * collapsed once; `applyBatch` is the two in one lazy plan. Apply is
   * idempotent per (pk, lsn): re-delivering a batch cannot change the
   * result, which is what makes at-least-once delivery safe.
   */
@@ -52,8 +56,13 @@ object CdcApply {
     * error — silently nulling existing data is never right (column
     * drops don't replicate; handle them as an explicit migration). */
   def applyBatch(current: DataFrame, changes: DataFrame,
-                 keys: Seq[String], allowEvolution: Boolean = false): DataFrame = {
-    val win = latest(changes, keys)
+                 keys: Seq[String], allowEvolution: Boolean = false): DataFrame =
+    mergeWinners(current, latest(changes, keys), keys, allowEvolution)
+
+  /** [[applyBatch]] over a batch already collapsed by [[latest]] (one
+    * event per key): the merge without a second collapse. */
+  def mergeWinners(current: DataFrame, win: DataFrame,
+                   keys: Seq[String], allowEvolution: Boolean = false): DataFrame = {
     val untouched = current.join(
       win.select(keys.map(col): _*), keys, "left_anti")
     val upserts = win.filter(col(OpCol) =!= Delete).drop(MetaCols: _*)

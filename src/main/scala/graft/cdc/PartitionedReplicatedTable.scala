@@ -4,6 +4,7 @@ import java.nio.charset.StandardCharsets
 
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils.DEFAULT_PARTITION_NAME
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DataType, StructType}
 
@@ -16,12 +17,16 @@ import org.apache.spark.sql.types.{DataType, StructType}
   * partitioned by `transaction_date`, a steady-state CDC batch touches
   * one or two date partitions of an arbitrarily large table.
   *
-  * Mechanics per batch: LWW-collapse the changes, collect the affected
-  * partition values (a tiny driver-side list), merge against a
-  * partition-pruned read of just those partitions in one job, stage the
-  * result with a partitioned write, rename each staged partition into
-  * place as its next immutable version, then publish ONE new manifest
-  * mapping every partition to its version and swap the root pointer.
+  * Mechanics per batch: LWW-collapse the changes and materialize the
+  * winners once (`localCheckpoint`), collect their partition values (a
+  * tiny driver-side list) from those rows, merge the same rows against
+  * a partition-pruned read of just those partitions, stage the result
+  * with a partitioned write, rename each staged partition into place as
+  * its next immutable version, then publish ONE new manifest mapping
+  * every partition to its version and swap the root pointer. The
+  * change batch's lineage — for a view refresh, the whole view delta —
+  * is therefore evaluated exactly once per commit, however many
+  * consumers read the winners.
   * The pointer swap is the single commit point: readers resolve all
   * partitions from one manifest, so a multi-partition batch is visible
   * all-or-nothing — no torn reads — and a crashed writer leaves only
@@ -176,13 +181,19 @@ final class PartitionedReplicatedTable(spark: SparkSession, path: String,
       .distinct().collect().map(r => Option(r.getString(0)).orNull).toSeq
 
   /** Initial snapshot: stage a partitioned write, install every
-    * partition as v=0, publish manifest 0. */
+    * partition as v=0, publish manifest 0. The partition list is read
+    * back from the staged `__p=` directories, so the input is evaluated
+    * once; a null partition value stages as the writer's default
+    * partition and is rejected before anything is installed. */
   def snapshot(df: DataFrame): Unit = {
     writeSmall(schemaPath, df.schema.json)
-    val parts = encodedValues(df)
-    require(!parts.contains(null),
-      s"snapshot rows must carry a non-null $partitionCol")
-    stageAndInstall(df, parts, Map.empty, 0)
+    val staged = stage(df)
+    val parts = fs.listStatus(staged).toSeq.map(_.getPath.getName)
+      .filter(_.startsWith("__p=")).map(_.stripPrefix("__p="))
+    val nullPart = parts.contains(DEFAULT_PARTITION_NAME)
+    if (nullPart) fs.delete(staged, true)
+    require(!nullPart, s"snapshot rows must carry a non-null $partitionCol")
+    install(staged, parts, Map.empty, 0)
   }
 
   /** Partition-scoped incremental apply. Upstream column ADDs evolve
@@ -194,32 +205,39 @@ final class PartitionedReplicatedTable(spark: SparkSession, path: String,
     * all-NULL until the batch lands — benign, no data loss.) */
   def applyChanges(changes: DataFrame): Unit = {
     require(isSnapshotDone, s"cannot apply changes before snapshot: $path")
-    val winners = CdcApply.latest(changes, keys)
+    // one evaluation of the batch: the partition collect and the merge
+    // below both read these materialized rows, never the lineage
+    val winners = CdcApply.latest(changes, keys).localCheckpoint(true)
     val affected = encodedValues(winners)
     require(!affected.contains(null),
       s"every change event must carry $partitionCol (incl. DELETE replica identity)")
     val m = manifest()
-    val merged = CdcApply.applyBatch(read(m, affected), winners, keys,
+    val merged = CdcApply.mergeWinners(read(m, affected), winners, keys,
       allowEvolution = true)
     if (merged.schema.fieldNames.toSeq != schema.fieldNames.toSeq)
       writeSmall(schemaPath, merged.schema.json)
-    stageAndInstall(merged, affected, m, readSmall(head).toInt + 1)
+    install(stage(merged), affected, m, readSmall(head).toInt + 1)
   }
 
-  /** One staged partitioned write, per-partition version renames, then
-    * a single manifest publish as the batch's commit point. A partition
-    * absent from the staged output became empty. With statsCols set,
-    * zone-map stats for the installed partitions are computed BETWEEN
-    * install and publish — one scan of the just-written (page-cache
-    * warm) parquet, never a recompute of the merge lineage — and ride
-    * the same manifest commit; untouched partitions carry their stats
-    * forward. */
-  private def stageAndInstall(df: DataFrame, affected: Seq[String],
-                              prev: Map[String, Entry],
-                              manifestV: Int): Unit = {
-    val stage = new Path(root, s"_stage-${System.nanoTime()}")
+  /** One partitioned write of `df` into a fresh `_stage-*` directory,
+    * one `__p=<enc>` subdirectory per partition value. */
+  private def stage(df: DataFrame): Path = {
+    val dir = new Path(root, s"_stage-${System.nanoTime()}")
     df.withColumn("__p", encExpr)
-      .write.partitionBy("__p").parquet(stage.toString)
+      .write.partitionBy("__p").parquet(dir.toString)
+    dir
+  }
+
+  /** Per-partition version renames out of a staged write, then a single
+    * manifest publish as the batch's commit point. A partition absent
+    * from the staged output became empty. With statsCols set, zone-map
+    * stats for the installed partitions are computed BETWEEN install
+    * and publish — one scan of the just-written (page-cache warm)
+    * parquet, never a recompute of the merge lineage — and ride the
+    * same manifest commit; untouched partitions carry their stats
+    * forward. */
+  private def install(stage: Path, affected: Seq[String],
+                      prev: Map[String, Entry], manifestV: Int): Unit = {
     val updates = affected.map { e =>
       val staged = new Path(stage, s"__p=$e")
       // next = one past the highest version ever written, NOT prev+1:
@@ -403,7 +421,7 @@ final class PartitionedReplicatedTable(spark: SparkSession, path: String,
         .sortWithinPartitions(ks: _*)
       else cur.repartitionByRange(ks: _*)
         .sortWithinPartitions(ks: _*)
-    stageAndInstall(clustered, affected, m, readSmall(head).toInt + 1)
+    install(stage(clustered), affected, m, readSmall(head).toInt + 1)
   }
 
   /** Table maintenance — the VACUUM analog this layout needs at a

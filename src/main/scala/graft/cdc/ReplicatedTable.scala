@@ -4,6 +4,7 @@ import java.nio.charset.StandardCharsets
 
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.StructType
 
 /** A CDC-maintained table: versioned parquet snapshots with an atomic
   * current-version pointer.
@@ -42,8 +43,28 @@ final class ReplicatedTable(spark: SparkSession, path: String,
 
   private def versionPath(v: Int) = s"$path/v=$v"
 
+  /** Schema of the newest version this instance wrote or read, so a
+    * read of that version names its schema instead of starting a
+    * footer-inference job. Seeded by [[commit]]; a newer version this
+    * instance has not written (another writer's, or after a restart)
+    * is inferred once. In memory only: the committed state is still
+    * just the version dir plus `_CURRENT`. */
+  @volatile private var knownSchema: Option[(Int, StructType)] = None
+
+  private def schemaOf(v: Int): StructType = knownSchema match {
+    case Some((`v`, s)) => s
+    case _ =>
+      val s = spark.read.parquet(versionPath(v)).schema
+      if (knownSchema.forall(_._1 < v)) knownSchema = Some(v -> s)
+      s
+  }
+
+  private def read(v: Int): DataFrame =
+    spark.read.schema(schemaOf(v)).parquet(versionPath(v))
+
   private def commit(df: DataFrame, v: Int): Unit = {
     df.write.mode("overwrite").parquet(versionPath(v))
+    knownSchema = Some(v -> df.schema)
     val out = fs.create(pointer, true)
     try out.write(v.toString.getBytes(StandardCharsets.UTF_8))
     finally out.close()
@@ -55,7 +76,7 @@ final class ReplicatedTable(spark: SparkSession, path: String,
   def isSnapshotDone: Boolean = currentVersion.isDefined
 
   def current(): DataFrame = currentVersion match {
-    case Some(v) => spark.read.parquet(versionPath(v))
+    case Some(v) => read(v)
     case None => throw new IllegalStateException(
       s"replicated table at $path has no snapshot yet")
   }
@@ -102,7 +123,7 @@ final class ReplicatedTable(spark: SparkSession, path: String,
       s"version $version not retained at $path (vacuumed, never " +
         s"committed, or written-but-uncommitted) — retained: " +
         s"${versions().mkString(", ")}")
-    spark.read.parquet(versionPath(version))
+    read(version)
   }
 
   /** Table maintenance: delete all version dirs older than the newest

@@ -15,6 +15,20 @@ import graft.model.Schemas.{Customer, Merchant, Product, Transaction}
   */
 object ReferenceCsv {
 
+  /** The directory of the four seed CSVs, resolved in one place:
+    * `GRAFT_REFERENCE_CSV` when set (a checkout of the reference's own
+    * `scripts/postgres_csv`), else the reference-shaped seed kept with
+    * the tests (`src/test/resources/reference_seed`, written by
+    * `tools/build_reference_seed.py`) — found on the classpath when the
+    * test resources are on it, else relative to the repo root. */
+  def seedDir: String =
+    sys.env.get("GRAFT_REFERENCE_CSV").filter(_.nonEmpty).getOrElse {
+      Option(getClass.getResource("/reference_seed/customers.csv"))
+        .filter(_.getProtocol == "file")
+        .map(u => new java.io.File(u.toURI).getParent)
+        .getOrElse("src/test/resources/reference_seed")
+    }
+
   def load(spark: SparkSession, path: String, table: String): DataFrame =
     spark.read
       .option("header", "true")

@@ -37,12 +37,17 @@ import graft.cdc.{CdcApply, KeyedTable}
   * property-tested in DynamicTableSpec.
   *
   * Scale posture: a fact refresh touches only Δ-keys and joins the
-  * (broadcast) dims, never the full fact. A dimension refresh scans
-  * the fact once (pruned to the FK semi-join; with the fact bucketed
-  * on the FK this is a bucket-pruned read) — dim changes are rare
-  * relative to fact traffic, which is the right side of the trade.
-  * Triggers map TARGET_LAG: `ProcessingTime(lag)` in production,
-  * `AvailableNow` in tests.
+  * (broadcast) dims, never the full fact. A dimension refresh reads
+  * the fact pruned to the FK semi-join (with the fact bucketed on the
+  * FK this is a bucket-pruned read) — dim changes are rare relative to
+  * fact traffic, which is the right side of the trade. Either refresh
+  * hands its view-change batch to the result table as one lazy plan,
+  * and the result's `applyChanges` runs that plan once: a partitioned
+  * result materializes the batch's winners before it both locates
+  * their partitions and merges them, and a flat result's one write is
+  * its one read. So each refresh evaluates its delta, star join
+  * included, exactly once. Triggers map TARGET_LAG:
+  * `ProcessingTime(lag)` in production, `AvailableNow` in tests.
   */
 final class DynamicTable(private[streaming] val fact: KeyedTable,
                          private[streaming] val result: KeyedTable,

@@ -30,11 +30,11 @@ import graft.sources.ReferenceCsv
   * (incremental view ≡ full recompute).
   *
   * Usage: runMain graft.tools.ReferenceDemo [csvDir]
+  * (default: [[ReferenceCsv.seedDir]])
   */
 object ReferenceDemo {
   def main(args: Array[String]): Unit = {
-    val csvDir = args.headOption
-      .getOrElse("/root/reference/scripts/postgres_csv")
+    val csvDir = args.headOption.getOrElse(ReferenceCsv.seedDir)
     val spark: SparkSession = Engine.session("local[8]", 8)
     spark.sparkContext.setLogLevel("ERROR")
     import spark.implicits._

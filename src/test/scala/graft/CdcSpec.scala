@@ -102,7 +102,7 @@ class CdcSpec extends AnyFunSuite {
   }
 
   test("generator: reference invariants hold and output is reproducible") {
-    val tables = ReferenceCsv.loadAll(spark, "/root/reference/scripts/postgres_csv")
+    val tables = ReferenceCsv.loadAll(spark, ReferenceCsv.seedDir)
     val gen = TransactionGenerator.generate(
       spark, tables("customers"), tables("products"), tables("merchants"),
       n = 3000, seed = 42L).cache()

@@ -55,7 +55,7 @@ class DashboardLiveSpec extends AnyFunSuite {
   }
 
   test("live dashboard over the maintained view ≡ batch dashboard over the same snapshot, mid-stream") {
-    val tables = ReferenceCsv.loadAll(spark, "/root/reference/scripts/postgres_csv")
+    val tables = ReferenceCsv.loadAll(spark, ReferenceCsv.seedDir)
     def viewOf(tx: DataFrame): DataFrame =
       PurchaseSummary.customerPurchaseSummary(
         tx, tables("customers"), tables("products"), tables("merchants"))

@@ -62,7 +62,7 @@ class DynamicAggregateSpec extends AnyFunSuite {
   }
 
   test("flagship: customer_spending maintained incrementally under CDC") {
-    val tables = ReferenceCsv.loadAll(spark, "/root/reference/scripts/postgres_csv")
+    val tables = ReferenceCsv.loadAll(spark, ReferenceCsv.seedDir)
     def viewOf(tx: DataFrame): DataFrame =
       Dashboard.calculateCustomerSpending(
         PurchaseSummary.customerPurchaseSummary(

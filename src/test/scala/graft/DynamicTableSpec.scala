@@ -254,7 +254,7 @@ class DynamicTableSpec extends AnyFunSuite {
   }
 
   test("flagship dynamic table: streamed CDC lands in the view (end-to-end)") {
-    val tables = ReferenceCsv.loadAll(spark, "/root/reference/scripts/postgres_csv")
+    val tables = ReferenceCsv.loadAll(spark, ReferenceCsv.seedDir)
     def viewOf(tx: DataFrame): DataFrame =
       PurchaseSummary.customerPurchaseSummary(
         tx, tables("customers"), tables("products"), tables("merchants"))
@@ -322,7 +322,7 @@ class PartitionedDynamicTableSpec extends AnyFunSuite {
   import spark.implicits._
 
   test("partition-scoped pipeline: partitioned fact AND partitioned view") {
-    val tables = ReferenceCsv.loadAll(spark, "/root/reference/scripts/postgres_csv")
+    val tables = ReferenceCsv.loadAll(spark, ReferenceCsv.seedDir)
     def viewOf(tx: DataFrame): DataFrame =
       PurchaseSummary.customerPurchaseSummary(
         tx, tables("customers"), tables("products"), tables("merchants"))

@@ -273,7 +273,7 @@ class PartitionedReplicatedTableSpec extends AnyFunSuite {
 
   test("date-partitioned transactions: partitioned ≡ flat replica under generated CDC") {
     val dir = Files.createTempDirectory("graft-ptab3").toString
-    val tables = ReferenceCsv.loadAll(spark, "/root/reference/scripts/postgres_csv")
+    val tables = ReferenceCsv.loadAll(spark, ReferenceCsv.seedDir)
     val flat = new ReplicatedTable(spark, s"$dir/flat", Seq("transaction_id"))
     val part = new PartitionedReplicatedTable(
       spark, s"$dir/part", Seq("transaction_id"), "transaction_date")

@@ -15,7 +15,7 @@ import graft.sources.ReferenceCsv
 class ReferenceGoldenSpec extends AnyFunSuite {
   import SparkTestSession._
 
-  private val csvDir = "/root/reference/scripts/postgres_csv"
+  private val csvDir = ReferenceCsv.seedDir
 
   // naive CSV parse is safe: no quoted/escaped fields in the seed data
   private def rows(name: String): Seq[Array[String]] = {

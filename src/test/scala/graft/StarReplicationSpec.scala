@@ -32,7 +32,7 @@ class StarReplicationSpec extends AnyFunSuite {
       s"$hint: view and full recompute diverge")
 
   test("four-table star pipeline: changes on every table maintain the view") {
-    val tables = ReferenceCsv.loadAll(spark, "/root/reference/scripts/postgres_csv")
+    val tables = ReferenceCsv.loadAll(spark, ReferenceCsv.seedDir)
     val dir = Files.createTempDirectory("graft-star").toString
     val star = new StarReplication(spark, s"$dir/star")
     star.snapshotAll(tables("transactions"), tables("customers"),
