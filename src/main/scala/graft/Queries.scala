@@ -39,6 +39,20 @@ object Queries {
       build: => T): T =
     memoized.getOrElseUpdate((spark, dir, name), build).asInstanceOf[T]
 
+  /** Drop every materialization of (session, SF dir) and unpersist its
+    * cached frames. Without it they stay resident for the JVM's life:
+    * a long-lived driver, or a test JVM whose later suites never read
+    * that dir again, would hold them. A query asked after the release
+    * rebuilds what it reads. */
+  def release(spark: SparkSession, dir: String): Unit =
+    memoized.keys.filter(k => k._1 == spark && k._2 == dir).foreach { k =>
+      memoized.remove(k).foreach {
+        case df: DataFrame => df.unpersist()
+        case (df: DataFrame, _) => df.unpersist()
+        case _ =>
+      }
+    }
+
   /** The flagship view, materialized once per (session, SF dir) and
     * shared by every dashboard query — mirroring the reference, whose
     * dashboard reads the MATERIALIZED dynamic table rather than
@@ -2303,8 +2317,7 @@ object Queries {
     // per-pair join back to the data. Run here in the under-capacity
     // regime (distinct < k, 64-bit hashes) where the answers are
     // exact, so the DuckDB COUNT(DISTINCT)/set-overlap oracle checks
-    // them outright — the same exactness-boundary discipline as
-    // SpaceSavingAgg. At corpus scale k caps the state and the same
+    // them outright. At corpus scale k caps the state and the same
     // plan degrades gracefully to the (k-1)/max estimator.
     "q64_kmv_overlap" -> ((s, d) => {
       import s.implicits._

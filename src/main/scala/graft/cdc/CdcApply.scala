@@ -20,9 +20,15 @@ import org.apache.spark.sql.functions._
   * caller that needs the winners more than once (the partitioned
   * replica collects their partitions, then merges them) materializes
   * `latest` once and hands the rows to `mergeWinners`, so the batch is
-  * collapsed once; `applyBatch` is the two in one lazy plan. Apply is
-  * idempotent per (pk, lsn): re-delivering a batch cannot change the
-  * result, which is what makes at-least-once delivery safe.
+  * collapsed once; `applyBatch` is the two in one lazy plan.
+  *
+  * Replay: re-applying the LAST applied batch is a no-op — its winners
+  * are already the rows' current images. Re-applying an OLDER batch
+  * after a newer one is not: the merge keeps no per-row lsn, so the
+  * old batch's winners overwrite newer images and the table moves back
+  * to older row versions. The pipelines are safe because Structured
+  * Streaming replays only the last uncommitted batch after a restart,
+  * never an earlier committed one.
   */
 object CdcApply {
 

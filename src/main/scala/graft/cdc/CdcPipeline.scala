@@ -16,7 +16,9 @@ object CdcPipeline {
     * replicated table. `changes` must be a streaming frame with the
     * table's columns plus the [[CdcApply.MetaCols]]. Each micro-batch
     * is one atomic version commit; the checkpoint gives effectively-once
-    * application on restart (replayed batches are idempotent merges).
+    * application on restart: only the last, uncommitted batch is
+    * replayed, and re-applying the last batch is a no-op (see
+    * [[CdcApply]] on replay).
     */
   def replicate(changes: DataFrame, table: KeyedTable,
                 checkpoint: String,

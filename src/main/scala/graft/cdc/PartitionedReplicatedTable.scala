@@ -56,7 +56,9 @@ final class PartitionedReplicatedTable(spark: SparkSession, path: String,
     extends KeyedTable {
 
   private val root = new Path(path)
-  private val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
+  private val conf = spark.sessionState.newHadoopConf()
+  private val fs = root.getFileSystem(conf)
+  private val meta = new MetaFiles(root, conf)
   private val Empty = "EMPTY"
   private val head = new Path(root, "_CURRENT")
 
@@ -74,22 +76,10 @@ final class PartitionedReplicatedTable(spark: SparkSession, path: String,
 
   private def partDir(e: String) = new Path(root, s"p=$e")
 
-  private def writeSmall(p: Path, content: String): Unit = {
-    val out = fs.create(p, true)
-    try out.write(content.getBytes(StandardCharsets.UTF_8))
-    finally out.close()
-  }
-
-  private def readSmall(p: Path): String = {
-    val in = fs.open(p)
-    try new String(in.readAllBytes(), StandardCharsets.UTF_8).trim
-    finally in.close()
-  }
-
   private def schemaPath = new Path(root, "_SCHEMA")
 
   private def schema: StructType =
-    DataType.fromJson(readSmall(schemaPath)).asInstanceOf[StructType]
+    DataType.fromJson(meta.read(schemaPath)).asInstanceOf[StructType]
 
   def isSnapshotDone: Boolean = fs.exists(head)
 
@@ -102,10 +92,10 @@ final class PartitionedReplicatedTable(spark: SparkSession, path: String,
     * manifests) still parses, so stats adoption needs no migration. */
   private def manifest(): Map[String, Entry] =
     if (!isSnapshotDone) Map.empty
-    else manifestFrom(new Path(root, s"m=${readSmall(head)}"))
+    else manifestFrom(new Path(root, s"m=${meta.read(head)}"))
 
   private def manifestFrom(p: Path): Map[String, Entry] =
-    readSmall(p)
+    meta.read(p)
       .linesIterator.filter(_.nonEmpty).map { line =>
         val f = line.split('\t')
         f(0) -> Entry(f(1), f.lift(2).filter(_.nonEmpty))
@@ -122,7 +112,7 @@ final class PartitionedReplicatedTable(spark: SparkSession, path: String,
   def versions(): Seq[Int] =
     if (!isSnapshotDone) Seq.empty
     else {
-      val committed = readSmall(head).trim.toInt
+      val committed = meta.read(head).toInt
       fs.listStatus(root).map(_.getPath.getName)
         .filter(_.startsWith("m="))
         .flatMap(_.stripPrefix("m=").toIntOption)
@@ -140,7 +130,7 @@ final class PartitionedReplicatedTable(spark: SparkSession, path: String,
     * schema only ever widens — old files always project). */
   def asOf(version: Int): DataFrame = {
     require(isSnapshotDone, s"no snapshot at $path yet")
-    val committed = readSmall(head).trim.toInt
+    val committed = meta.read(head).toInt
     val p = new Path(root, s"m=$version")
     require(version <= committed && fs.exists(p),
       s"manifest $version not retained at $path (vacuumed, never " +
@@ -186,7 +176,7 @@ final class PartitionedReplicatedTable(spark: SparkSession, path: String,
     * once; a null partition value stages as the writer's default
     * partition and is rejected before anything is installed. */
   def snapshot(df: DataFrame): Unit = {
-    writeSmall(schemaPath, df.schema.json)
+    meta.write(schemaPath, df.schema.json)
     val staged = stage(df)
     val parts = fs.listStatus(staged).toSeq.map(_.getPath.getName)
       .filter(_.startsWith("__p=")).map(_.stripPrefix("__p="))
@@ -215,8 +205,8 @@ final class PartitionedReplicatedTable(spark: SparkSession, path: String,
     val merged = CdcApply.mergeWinners(read(m, affected), winners, keys,
       allowEvolution = true)
     if (merged.schema.fieldNames.toSeq != schema.fieldNames.toSeq)
-      writeSmall(schemaPath, merged.schema.json)
-    install(stage(merged), affected, m, readSmall(head).toInt + 1)
+      meta.write(schemaPath, merged.schema.json)
+    install(stage(merged), affected, m, meta.read(head).toInt + 1)
   }
 
   /** One partitioned write of `df` into a fresh `_stage-*` directory,
@@ -263,11 +253,11 @@ final class PartitionedReplicatedTable(spark: SparkSession, path: String,
     val next = prev ++ updates.map { case (e, v) =>
       e -> Entry(v, if (v == Empty) None else stats.get(e))
     }
-    writeSmall(new Path(root, s"m=$manifestV"),
+    meta.write(new Path(root, s"m=$manifestV"),
       next.map { case (e, en) =>
         s"$e\t${en.ver}" + en.stats.fold("")("\t" + _)
       }.mkString("\n"))
-    writeSmall(head, manifestV.toString) // the commit point
+    meta.write(head, manifestV.toString) // the commit point
     fs.delete(stage, true)
   }
 
@@ -421,7 +411,7 @@ final class PartitionedReplicatedTable(spark: SparkSession, path: String,
         .sortWithinPartitions(ks: _*)
       else cur.repartitionByRange(ks: _*)
         .sortWithinPartitions(ks: _*)
-    install(stage(clustered), affected, m, readSmall(head).toInt + 1)
+    install(stage(clustered), affected, m, meta.read(head).toInt + 1)
   }
 
   /** Table maintenance — the VACUUM analog this layout needs at a
@@ -440,13 +430,13 @@ final class PartitionedReplicatedTable(spark: SparkSession, path: String,
              stageGraceMs: Long = 15 * 60 * 1000L): Unit = {
     require(keepManifests >= 1, "must retain at least the head manifest")
     if (!isSnapshotDone) return
-    val hv = readSmall(head).toInt
+    val hv = meta.read(head).toInt
     val keepFrom = math.max(0, hv - keepManifests + 1)
     // live (partition, version-dir) references across retained manifests
     val live: Set[(String, String)] = (keepFrom to hv).flatMap { v =>
       val p = new Path(root, s"m=$v")
       if (!fs.exists(p)) Nil
-      else readSmall(p).linesIterator.filter(_.nonEmpty).map { line =>
+      else meta.read(p).linesIterator.filter(_.nonEmpty).map { line =>
         val f = line.split('\t'); (f(0), f(1))
       }.toSeq
     }.filter(_._2 != Empty).toSet

@@ -1,7 +1,5 @@
 package graft.cdc
 
-import java.nio.charset.StandardCharsets
-
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.types.StructType
@@ -29,17 +27,13 @@ final class ReplicatedTable(spark: SparkSession, path: String,
                             val keys: Seq[String]) extends KeyedTable {
 
   private val root = new Path(path)
-  private val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
+  private val conf = spark.sessionState.newHadoopConf()
+  private val fs = root.getFileSystem(conf)
+  private val meta = new MetaFiles(root, conf)
   private val pointer = new Path(root, "_CURRENT")
 
   def currentVersion: Option[Int] =
-    if (!fs.exists(pointer)) None
-    else {
-      val in = fs.open(pointer)
-      try Some(new String(
-        in.readAllBytes(), StandardCharsets.UTF_8).trim.toInt)
-      finally in.close()
-    }
+    if (!fs.exists(pointer)) None else Some(meta.read(pointer).toInt)
 
   private def versionPath(v: Int) = s"$path/v=$v"
 
@@ -65,9 +59,7 @@ final class ReplicatedTable(spark: SparkSession, path: String,
   private def commit(df: DataFrame, v: Int): Unit = {
     df.write.mode("overwrite").parquet(versionPath(v))
     knownSchema = Some(v -> df.schema)
-    val out = fs.create(pointer, true)
-    try out.write(v.toString.getBytes(StandardCharsets.UTF_8))
-    finally out.close()
+    meta.write(pointer, v.toString) // the commit point
   }
 
   /** Initial snapshot — phase 1 of the replication protocol. */
@@ -81,7 +73,8 @@ final class ReplicatedTable(spark: SparkSession, path: String,
       s"replicated table at $path has no snapshot yet")
   }
 
-  /** Incremental apply — phase 2. Idempotent per batch. Upstream
+  /** Incremental apply — phase 2. Re-applying the last applied batch
+    * is a no-op; an older one is not (see [[CdcApply]]). Upstream
     * column ADDs evolve the table automatically (existing rows take
     * NULL), mirroring the connector's transparent handling of
     * `ALTER TABLE ADD COLUMN`. */

@@ -1298,8 +1298,7 @@ object Dedup {
     * first (id, seg_idx) occurrence; every doc is rebuilt from its
     * kept segments in order. Two shuffles — one hash-partitioned
     * window on the segment text, one id regroup; per-doc state is
-    * bounded by doc length. [[graft.streaming.IncrementalSegmentDedup]]
-    * maintains the same output under arrivals. */
+    * bounded by doc length. */
   def segmentDedup(docs: DataFrame, idCol: String, textCol: String,
                    segLen: Int): DataFrame = {
     val w = org.apache.spark.sql.expressions.Window

@@ -82,9 +82,8 @@ object DigestBuckets {
   }
 }
 
-/** Mergeable quantile sketch as a typed `Aggregator`: the third member
-  * of the bounded-state family ([[TopKAgg]], [[SpaceSavingAgg]],
-  * [[BottomKSketch]]).
+/** Mergeable quantile sketch as a typed `Aggregator`: a member of the
+  * bounded-state family with [[TopKAgg]] and [[BottomKSketch]].
   *
   * Why not KLL/GK (the textbook mergeable quantile sketches — Karnin
   * et al. FOCS'16): their compaction step is randomized (KLL) or

@@ -7,15 +7,15 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import graft.text.{Mixture, TextFunctions}
 
 /** DSIR importance scoring (c10 / [[Mixture.importanceWeights]]) as
-  * maintained state — the frozen-model + explicit-retrain discipline
-  * of [[IncrementalIvfIndex]], NOT per-arrival exact IVM, because
+  * maintained state — a frozen model with an explicit retrain,
+  * NOT per-arrival exact IVM, because
   * exact maintenance of DSIR has no locality to exploit: every
   * arriving token moves the raw model's scalars (token totals and
   * vocabulary size), and those sit inside every document's per-token
   * grid term, so "exact" would rescore the whole corpus each batch.
   * The method's own production shape is the frozen form — train the
   * importance model once, score the stream under it, refresh when
-  * drift warrants — which maps onto the established retrain contract:
+  * drift warrants — which maps onto this retrain contract:
   *
   *  - `docs/` — [[IndexDirs]]-versioned append-only store of every
   *    ingested document's feature multiset: one row per (doc,
@@ -39,8 +39,7 @@ import graft.text.{Mixture, TextFunctions}
   * the model over the full store and rescores every raw doc into the
   * next version — after it, the maintained scores are EXACTLY the
   * one-shot [[Mixture.importanceWeights]] over every document seen
-  * (same formula, same 1e-6 grid; spec-pinned), the same way a
-  * retrained IVF index equals its one-shot build.
+  * (same formula, same 1e-6 grid; spec-pinned).
   *
   * Crash/replay: docs commit BEFORE scores (claims-before-results); a
   * replayed batch re-appends nothing (doc-pruned anti-joins on both

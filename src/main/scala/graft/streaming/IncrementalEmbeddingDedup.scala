@@ -21,8 +21,8 @@ import graft.similarity.Similarity
   * PLUS all single-bit flips — two vectors collide iff their key sets
   * intersect, i.e. iff their home buckets differ by ≤ 2 bits in some
   * table. The maintained index therefore stores ALL (planes+1) keys
-  * per table per vector (`tk = table·2^planes + key`, combined like
-  * [[IncrementalAnnIndex]]'s tb), so a delta-vs-index equi-join on
+  * per table per vector (`tk = table·2^planes + key`), so a
+  * delta-vs-index equi-join on
   * `tk` reproduces exactly the batch candidate set across batch
   * boundaries. Rows land hive-partitioned on `pk`, the [[BucketTrie]]
   * bucket of `xxhash64(tk)` (directory prune + tk-sorted footer skip,

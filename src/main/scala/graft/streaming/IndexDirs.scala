@@ -6,9 +6,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Versioned directory discipline shared by every maintained index
   * ([[IncrementalNearDup]], [[IncrementalEmbeddingDedup]],
-  * [[IncrementalAnnIndex]], [[IncrementalIvfIndex]],
-  * [[IncrementalIvfPqIndex]]) — the physical-layout analogue of
-  * [[LabelStore]]'s versioned commits.
+  * [[IncrementalBm25]], [[IncrementalDsir]], ...) — the
+  * physical-layout analogue of [[LabelStore]]'s versioned commits.
   *
   * Layout: `<path>/v<N>` version directories. A version is LIVE once
   * its root `_SUCCESS` (written by the Spark job that filled it) and

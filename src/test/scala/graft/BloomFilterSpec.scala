@@ -5,7 +5,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.functions.bloom
 
-class BloomFilterSpec extends AnyFunSuite {
+class BloomFilterSpec extends AnyFunSuite with ReleasesCatalog {
   import SparkTestSession._
   import spark.implicits._
 

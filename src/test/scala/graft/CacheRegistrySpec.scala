@@ -12,7 +12,8 @@ import graft.dedup.Dedup
   * must still have its CacheManager entry dropped — the manager pins
   * every persisted plan strongly, so a GC'd DataFrame would otherwise
   * leak its cached blocks for the session's lifetime with no handle
-  * left (ContextCleaner never touches them). */
+  * left (ContextCleaner never touches them). Likewise the catalog's
+  * materializations: `Queries.release` drops one dir's cached frames. */
 class CacheRegistrySpec extends AnyFunSuite {
   import SparkTestSession._
 
@@ -56,5 +57,38 @@ class CacheRegistrySpec extends AnyFunSuite {
     }
     assert(gone, "dead entry's cache survived the registration sweep")
     Dedup.releaseCaches()
+  }
+
+  test("Queries.release drops one dir's materializations and their caches") {
+    import spark.implicits._
+    import org.apache.spark.sql.functions._
+    def docsDir(): String = {
+      val dir = java.nio.file.Files.createTempDirectory("graft-release")
+        .toString
+      Seq((1L, "the cat sat"), (2L, "the dog sat")).toDF("doc_id", "text")
+        .withColumn("lang", lit("en")).withColumn("source", lit("src"))
+        .withColumn("n_chars", length(col("text")).cast("long"))
+        .write.parquet(s"$dir/documents.parquet")
+      dir
+    }
+    // the catalog caches each dir's documents scan on first use
+    def docsCached(dir: String): Boolean = UncacheByPlan.isCached(spark,
+      graft.sources.TestData.table(spark, dir, "documents")
+        .queryExecution.logical)
+    val (a, b) = (docsDir(), docsDir())
+    val want = Queries.all("t20_kneser_ney")(spark, a).collect().toSeq
+    Queries.all("t20_kneser_ney")(spark, b).collect()
+    assert(docsCached(a) && docsCached(b))
+    Queries.release(spark, a)
+    // unpersist is async (blocking=false): poll briefly
+    val gone = (1 to 100).exists { _ =>
+      if (docsCached(a)) { Thread.sleep(20); false } else true
+    }
+    assert(gone, "release left the dir's cached documents behind")
+    assert(docsCached(b), "release dropped another dir's cache")
+    // a query after the release rebuilds what it reads
+    assert(Queries.all("t20_kneser_ney")(spark, a).collect().toSeq == want)
+    Queries.release(spark, a)
+    Queries.release(spark, b)
   }
 }

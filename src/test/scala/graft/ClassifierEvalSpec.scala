@@ -14,7 +14,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * bit-for-bit identical on the real corpus AND on adversarial
   * random frames (heavy score ties, zero-positive sources,
   * all-positive sources, single-row sources). */
-class ClassifierEvalSpec extends AnyFunSuite {
+class ClassifierEvalSpec extends AnyFunSuite with ReleasesCatalog {
   import SparkTestSession._
 
   private val schema = StructType(Seq(

@@ -8,7 +8,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * number of key-partitioned hash joins. These tests pin the physical
   * plan shape, not just the answers (the oracle checks those).
   */
-class CorrelatedSubquerySpec extends AnyFunSuite {
+class CorrelatedSubquerySpec extends AnyFunSuite with ReleasesCatalog {
   import SparkTestSession._
 
   private def plan(name: String): String =

@@ -135,32 +135,6 @@ class CrashRecoverySpec extends AnyFunSuite {
         .collect().map(r => (r.getLong(0), r.getLong(1))).sortBy(_._1).toSeq)
   }
 
-  test("containment: pairs | docs | postings boundaries all recover", Slow) {
-    val all = TestData.table(spark, sf, "documents")
-      .select(col("doc_id"),
-        array_distinct(graft.text.TextFunctions.tokens(col("text")))
-          .as("w"))
-      .as[(Long, Seq[String])].collect().sortBy(_._1).take(240).toSeq
-    val batches = all.grouped(math.max(1, all.length / 2)).toSeq.take(2)
-    killBetweenStores("containment", Seq("pairs", "docs", "postings"), 2,
-      (i, sp) => IncrementalContainment.processBatch(
-        batches(i).toDF("doc_id", "w"), "doc_id", "w", sp),
-      sp => IncrementalContainment.pairs(spark, sp)
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
-        .sortBy(p => (p._1, p._2)).toSeq)
-  }
-
-  test("segment-dedup: claims | results boundary recovers", Slow) {
-    val batches = docBatches(2)
-    killBetweenStores("segdedup", Seq("claims", "results"), 2,
-      (i, sp) => IncrementalSegmentDedup.processBatch(
-        batches(i).toDF("doc_id", "text"), "doc_id", "text", sp, 10),
-      sp => IncrementalSegmentDedup.results(spark, sp).get
-        .select("doc_id", "n_segs", "n_dropped", "text_hash")
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
-          r.getString(3))).sortBy(_._1).toSeq)
-  }
-
   test("embedding-dedup: bands | vectors | labels boundaries all recover", Slow) {
     val emb = TestData.table(spark, sf, "embeddings")
       .select("vec_id", "embedding")

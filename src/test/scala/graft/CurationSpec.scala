@@ -9,7 +9,7 @@ import graft.text.TextFunctions
 /** Semantics of the round-4 curation operators beyond the oracle's
   * hash check: packing invariants, sample determinism under
   * repartitioning, and frame-window reassembly. */
-class CurationSpec extends AnyFunSuite {
+class CurationSpec extends AnyFunSuite with ReleasesCatalog {
   import SparkTestSession._
 
   test("t12: sequences are contiguous, disjoint doc-id ranges per source") {

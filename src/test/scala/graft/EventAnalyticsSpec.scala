@@ -10,7 +10,7 @@ import graft.streaming.EventAnalytics
 case class Ev(event_id: Long, ts: Long, user_id: Long,
               event_type: String, value: Double)
 
-class EventAnalyticsSpec extends AnyFunSuite {
+class EventAnalyticsSpec extends AnyFunSuite with ReleasesCatalog {
   import SparkTestSession._
   import spark.implicits._
 

@@ -11,7 +11,7 @@ import graft.multimodal.{FeatureHash, Multimodal}
   * content scores above unrelated content), the whole-stage-codegen
   * seam of the expression, and the m03 catalog query ≡ its md5-groups
   * oracle on the sf0.001 corpus. */
-class FeatureHashSpec extends AnyFunSuite {
+class FeatureHashSpec extends AnyFunSuite with ReleasesCatalog {
   import SparkTestSession._
   import spark.implicits._
 

@@ -12,7 +12,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * NO quadratic join and no fact-side pre-aggregation shuffle beyond
   * the group-by exchange — the shape that survives a 100× scale-up
   * (dims flip to shuffled hash joins only when AQE sizes say so). */
-class JoinPlanShapeSpec extends AnyFunSuite {
+class JoinPlanShapeSpec extends AnyFunSuite with ReleasesCatalog {
   import SparkTestSession._
 
   private def executed(name: String): SparkPlan = {

@@ -47,8 +47,9 @@ class KneserNeySpec extends AnyFunSuite {
   }
 
   private def run(q: String, dir: String): Map[Long, (Long, Double)] =
-    Queries.all(q)(spark, dir).collect()
+    try Queries.all(q)(spark, dir).collect()
       .map(r => r.getLong(0) -> (r.getLong(1), r.getDouble(2))).toMap
+    finally Queries.release(spark, dir)
 
   test("t20 == plain-JVM interpolated-KN recompute") {
     val corpus = Seq(

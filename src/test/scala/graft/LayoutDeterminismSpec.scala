@@ -10,7 +10,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * splits, dynamic coalescing). A double-summation query would fail
   * this spec: float addition is not associative, so per-layout
   * partial-aggregation orders produce different low bits. */
-class LayoutDeterminismSpec extends AnyFunSuite {
+class LayoutDeterminismSpec extends AnyFunSuite with ReleasesCatalog {
   import SparkTestSession._
 
   // the aggregate-heavy queries whose stability depends on the

@@ -12,7 +12,7 @@ import scala.util.Random
   * estimates stay within the 5 % relative-error guarantee vs the
   * exact percentile on real catalog data.
   */
-class QuantileSketchSpec extends AnyFunSuite {
+class QuantileSketchSpec extends AnyFunSuite with ReleasesCatalog {
   import SparkTestSession._
 
   test("bucket index preserves value order; representative is exact below 100") {

@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import org.scalatest.{BeforeAndAfterAll, Suite}
 import org.scalatest.funsuite.AnyFunSuite
 
 object SparkTestSession {
@@ -18,7 +19,17 @@ object SparkTestSession {
   val sf: String = "/root/testdata/sf0.001"
 }
 
-class QueriesSpec extends AnyFunSuite {
+/** A suite that runs catalog queries over [[SparkTestSession.sf]]: after
+  * it, the catalog's materializations for that dir are released, so the
+  * suites that follow in the same test JVM do not carry its cached
+  * frames. */
+trait ReleasesCatalog extends BeforeAndAfterAll { this: Suite =>
+  override protected def afterAll(): Unit =
+    try Queries.release(SparkTestSession.spark, SparkTestSession.sf)
+    finally super.afterAll()
+}
+
+class QueriesSpec extends AnyFunSuite with ReleasesCatalog {
   import SparkTestSession._
 
   test("every declared query has rows and every oracle key exists") {

@@ -3,7 +3,6 @@ package graft
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.operators.SkewJoin
 import graft.similarity.Similarity
 import graft.sources.TestData
 
@@ -268,38 +267,5 @@ class SimilarityIvfSpec extends AnyFunSuite {
     assert(meanLists <= 3.0,
       s"margin budget did not concentrate: $meanLists lists/query (pin 3.0)")
     listed.unpersist(); emb.unpersist()
-  }
-
-  test("salted join: correct results, hot key spread across salts") {
-    val hot = (1 to 5000).map(i => (1L, s"p$i")) ++
-      (1 to 50).map(i => (2L, s"q$i"))
-    val probe = hot.toDF("k", "payload")
-    val build = Seq((1L, "dim-one"), (2L, "dim-two"), (3L, "dim-three"))
-      .toDF("k", "attr")
-
-    val plain = probe.join(build, Seq("k")).orderBy("k", "payload")
-      .collect().map(r => (r.getLong(0), r.getString(1), r.getString(2)))
-    val salted = SkewJoin.saltedJoin(probe, build, "k", salt = 8)
-      .orderBy("k", "payload")
-      .collect().map(r => (r.getLong(0), r.getString(1), r.getString(2)))
-    assert(salted.toSeq == plain.toSeq)
-
-    // left join preserves unmatched probe rows too
-    val probe2 = (probe.collect().map(r => (r.getLong(0), r.getString(1)))
-      :+ ((99L, "orphan"))).toSeq.toDF("k", "payload")
-    val l = SkewJoin.saltedJoin(probe2, build, "k", salt = 4, "left")
-    assert(l.count() == probe2.count())
-    assert(l.filter(col("k") === 99L).head().isNullAt(2))
-  }
-
-  test("salted join rejects build-preserving join types") {
-    val probe = Seq((1L, "p")).toDF("k", "payload")
-    val build = Seq((1L, "b")).toDF("k", "attr")
-    for (jt <- Seq("right", "right_outer", "full", "full_outer", "outer")) {
-      val e = intercept[IllegalArgumentException] {
-        SkewJoin.saltedJoin(probe, build, "k", salt = 4, jt)
-      }
-      assert(e.getMessage.contains("probe-preserving"), jt)
-    }
   }
 }

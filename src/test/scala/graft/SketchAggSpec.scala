@@ -9,7 +9,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * oracles here — at corpus scale one runs the sketch, at test scale
   * both, and the spec pins the accuracy contract.
   */
-class SketchAggSpec extends AnyFunSuite {
+class SketchAggSpec extends AnyFunSuite with ReleasesCatalog {
   import SparkTestSession._
 
   private lazy val summary =

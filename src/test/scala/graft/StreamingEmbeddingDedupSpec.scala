@@ -195,10 +195,9 @@ class StreamingEmbeddingDedupSpec extends AnyFunSuite {
   }
 
   test("probe volume stays ~flat at 10x corpus when planes grow with log n") {
-    // Same discipline as the ANN index gate (StreamingAnnSpec): the
-    // per-key candidate load is n/2^planes, so planes grow with log n
-    // and a fixed-size delta's probe reads about the same number of
-    // colliding key rows, not 10x. Background vectors only (no true
+    // The per-key candidate load is n/2^planes, so planes grow with
+    // log n and a fixed-size delta's probe reads about the same number
+    // of colliding key rows, not 10x. Background vectors only (no true
     // dups) — pure index-growth pressure.
     def vecs(seed: Int, from: Int, n: Int) = {
       val rnd = new scala.util.Random(seed)
