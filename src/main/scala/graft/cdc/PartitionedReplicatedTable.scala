@@ -56,9 +56,8 @@ final class PartitionedReplicatedTable(spark: SparkSession, path: String,
     extends KeyedTable {
 
   private val root = new Path(path)
-  private val conf = spark.sessionState.newHadoopConf()
-  private val fs = root.getFileSystem(conf)
-  private val meta = new MetaFiles(root, conf)
+  private val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
+  private val meta = new MetaFiles(root, fs)
   private val Empty = "EMPTY"
   private val head = new Path(root, "_CURRENT")
 

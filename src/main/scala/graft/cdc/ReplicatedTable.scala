@@ -27,9 +27,8 @@ final class ReplicatedTable(spark: SparkSession, path: String,
                             val keys: Seq[String]) extends KeyedTable {
 
   private val root = new Path(path)
-  private val conf = spark.sessionState.newHadoopConf()
-  private val fs = root.getFileSystem(conf)
-  private val meta = new MetaFiles(root, conf)
+  private val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
+  private val meta = new MetaFiles(root, fs)
   private val pointer = new Path(root, "_CURRENT")
 
   def currentVersion: Option[Int] =

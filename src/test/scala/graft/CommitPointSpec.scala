@@ -5,7 +5,8 @@ import java.net.URI
 import java.nio.file.Files
 import java.sql.Timestamp
 
-import org.apache.hadoop.fs.{FSDataOutputStream, Path, RawLocalFileSystem}
+import org.apache.hadoop.fs.{FSDataOutputStream, LocalFileSystem, Path,
+  RawLocalFileSystem}
 import org.apache.hadoop.fs.permission.FsPermission
 import org.apache.hadoop.util.Progressable
 import org.scalatest.funsuite.AnyFunSuite
@@ -15,20 +16,21 @@ import graft.cdc._
 /** A writer that fails midway through a commit-point write — the
   * version pointer `_CURRENT`, or the partitioned table's schema
   * sidecar — must leave the table readable at its previous version,
-  * and a retry of the same batch must commit it. The tables live on
-  * [[FailingWriteFs]], the local file system under a scheme whose
-  * output streams throw on write for the armed file names. */
+  * and a retry of the same batch must commit it. Each case runs twice,
+  * once per way `MetaFiles` renames over: on [[FailingChecksumFs]] (a
+  * checksummed local file system, the raw rename) and on
+  * [[FailingWriteFs]] (its raw file system alone, Spark's checkpoint
+  * file manager). Both throw on write for the armed file names. */
 class CommitPointSpec extends AnyFunSuite {
   import SparkTestSession._
   import spark.implicits._
 
   spark.sparkContext.hadoopConfiguration
     .set("fs.failfs.impl", classOf[FailingWriteFs].getName)
+  spark.sparkContext.hadoopConfiguration
+    .set("fs.failcrcfs.impl", classOf[FailingChecksumFs].getName)
 
   private def ts(s: Long) = new Timestamp(s * 1000L)
-
-  private def tableDir(label: String): String =
-    "failfs://" + Files.createTempDirectory(s"graft-commit-$label")
 
   /** Run `apply` with writes to `name` failing; it must throw. */
   private def failing(name: String)(apply: => Unit): Unit = {
@@ -49,52 +51,60 @@ class CommitPointSpec extends AnyFunSuite {
   private def rows(t: KeyedTable): Seq[PKv] =
     t.current().select("k", "day", "v").as[PKv].collect().sortBy(_.k).toSeq
 
-  test("ReplicatedTable: a failed pointer write keeps the previous version") {
-    val t = new ReplicatedTable(spark, s"${tableDir("flat")}/t", Seq("k"))
-    t.snapshot(base.toDF())
-    failing("_CURRENT")(t.applyChanges(batch.toDF()))
-    assert(t.currentVersion.contains(0))
-    assert(rows(t) == base)
-    t.applyChanges(batch.toDF())
-    assert(t.currentVersion.contains(1))
-    assert(rows(t) == after)
-  }
+  for ((scheme, label) <- Seq("failcrcfs" -> "local rename",
+                               "failfs" -> "checkpoint file manager")) {
+    def tableDir(name: String): String =
+      s"$scheme://" + Files.createTempDirectory(s"graft-commit-$name") + "/t"
 
-  test("PartitionedReplicatedTable: a failed head write keeps the previous manifest") {
-    val t = new PartitionedReplicatedTable(
-      spark, s"${tableDir("part")}/t", Seq("k"), "day")
-    t.snapshot(base.toDF())
-    failing("_CURRENT")(t.applyChanges(batch.toDF()))
-    assert(t.versions() == Seq(0))
-    assert(rows(t) == base)
-    t.applyChanges(batch.toDF())
-    assert(t.versions() == Seq(0, 1))
-    assert(rows(t) == after)
-  }
+    test(s"ReplicatedTable: a failed pointer write keeps the previous version ($label)") {
+      val t = new ReplicatedTable(spark, tableDir("flat"), Seq("k"))
+      t.snapshot(base.toDF())
+      failing("_CURRENT")(t.applyChanges(batch.toDF()))
+      assert(t.currentVersion.contains(0))
+      assert(rows(t) == base)
+      t.applyChanges(batch.toDF())
+      assert(t.currentVersion.contains(1))
+      assert(rows(t) == after)
+    }
 
-  test("PartitionedReplicatedTable: a failed schema write keeps the previous schema") {
-    val t = new PartitionedReplicatedTable(
-      spark, s"${tableDir("schema")}/t", Seq("k"), "day")
-    t.snapshot(base.toDF())
-    // an upstream ADD COLUMN: the apply rewrites _SCHEMA before installing
-    val evolving = batch.toDF().withColumn("note", $"v")
-    failing("_SCHEMA")(t.applyChanges(evolving))
-    assert(t.current().columns.toSeq == Seq("k", "day", "v"))
-    assert(rows(t) == base)
-    t.applyChanges(evolving)
-    assert(t.current().columns.toSeq == Seq("k", "day", "v", "note"))
-    assert(rows(t) == after)
+    test(s"PartitionedReplicatedTable: a failed head write keeps the previous manifest ($label)") {
+      val t = new PartitionedReplicatedTable(
+        spark, tableDir("part"), Seq("k"), "day")
+      t.snapshot(base.toDF())
+      failing("_CURRENT")(t.applyChanges(batch.toDF()))
+      assert(t.versions() == Seq(0))
+      assert(rows(t) == base)
+      t.applyChanges(batch.toDF())
+      assert(t.versions() == Seq(0, 1))
+      assert(rows(t) == after)
+    }
+
+    test(s"PartitionedReplicatedTable: a failed schema write keeps the previous schema ($label)") {
+      val t = new PartitionedReplicatedTable(
+        spark, tableDir("schema"), Seq("k"), "day")
+      t.snapshot(base.toDF())
+      // an upstream ADD COLUMN: the apply rewrites _SCHEMA before installing
+      val evolving = batch.toDF().withColumn("note", $"v")
+      failing("_SCHEMA")(t.applyChanges(evolving))
+      assert(t.current().columns.toSeq == Seq("k", "day", "v"))
+      assert(rows(t) == base)
+      t.applyChanges(evolving)
+      assert(t.current().columns.toSeq == Seq("k", "day", "v", "note"))
+      assert(rows(t) == after)
+    }
   }
 }
 
-/** The local file system under the `failfs` scheme. While a file whose
-  * name contains an [[FailingWriteFs.armed]] string is being written,
-  * its output stream throws on every write: the file is created (and,
-  * when overwritten in place, truncated) but gets no content, as when
-  * a writer crashes midway. */
-class FailingWriteFs extends RawLocalFileSystem {
-  override def getUri: URI = URI.create("failfs:///")
-  override def getScheme: String = "failfs"
+/** The raw local file system under its own scheme (`failfs` unless
+  * built for another). While a file whose name contains an
+  * [[FailingWriteFs.armed]] string is being written, its output stream
+  * throws on every write: the file is created (and, when overwritten in
+  * place, truncated) but gets no content, as when a writer crashes
+  * midway. */
+class FailingWriteFs(scheme: String) extends RawLocalFileSystem {
+  def this() = this("failfs")
+  override def getUri: URI = URI.create(s"$scheme:///")
+  override def getScheme: String = scheme
 
   private def guard(f: Path, out: FSDataOutputStream): FSDataOutputStream =
     if (!FailingWriteFs.armed.exists(f.getName.contains)) out
@@ -117,6 +127,12 @@ class FailingWriteFs extends RawLocalFileSystem {
                       progress: Progressable): FSDataOutputStream =
     guard(f, super.create(f, permission, overwrite, bufferSize,
       replication, blockSize, progress))
+}
+
+/** The checksummed local file system over [[FailingWriteFs]], under the
+  * `failcrcfs` scheme. */
+class FailingChecksumFs extends LocalFileSystem(new FailingWriteFs("failcrcfs")) {
+  override def getScheme: String = "failcrcfs"
 }
 
 object FailingWriteFs {
